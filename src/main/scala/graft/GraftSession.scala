@@ -36,6 +36,7 @@ object GraftSession {
         ext.injectFunction(graft.exprs.IvfProbe.registration)
         ext.injectFunction(graft.exprs.BpeStats.registration)
         ext.injectFunction(graft.exprs.HtmlEntities.registration)
+        ext.injectFunction(graft.exprs.HtmlTexts.registration)
         ext.injectFunction(graft.exprs.BpeStats.pairsRegistration)
         graft.exprs.TextSketches.registrations.foreach(ext.injectFunction)
         ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   - every HTML4 named entity (`&eacute;`, `&copy;`, `&hellip;`, … —
   *     the full 252-name table: Latin-1, Greek, symbols, punctuation)
-  *     rewrites to its numeric form `&#N;`, which Spark's `xpath` then
+  *     rewrites to its numeric form `&#N;`, which an XML parser then
   *     decodes exactly as jsdom decodes the name;
   *   - XML-native entities (`&amp; &lt; &gt; &quot; &apos;`) and numeric
   *     references (`&#233;`, `&#x2014;`) pass through byte-identical;
@@ -29,6 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * semicolon-less forms (`&amp` etc.) are not decoded — both rewrite as
   * literal text via the `&amp;` escape, the same behavior the regex
   * chain had for every non-curated entity.
+  *
+  * `html_texts` reads references with the same rules, decoding in place
+  * ([[HtmlEntities.decode]]) instead of rewriting for a parser.
   */
 case class HtmlEntities(child: Expression) extends UnaryExpression {
 
@@ -123,10 +126,12 @@ object HtmlEntities {
     */
   private val maxRef = 9
 
-  private def isXmlNative(s: String, from: Int, to: Int): Boolean = {
-    val n = s.substring(from, to)
-    n == "amp" || n == "lt" || n == "gt" || n == "quot" || n == "apos"
-  }
+  /** The five XML-native names, which an XML parser decodes itself. */
+  private val xmlNative: Map[String, Int] =
+    Map("amp" -> 38, "lt" -> 60, "gt" -> 62, "quot" -> 34, "apos" -> 39)
+
+  private def isXmlNative(s: String, from: Int, to: Int): Boolean =
+    xmlNative.contains(s.substring(from, to))
 
   private def isNumericRef(s: String, from: Int, to: Int): Boolean = {
     if (to - from < 2 || s.charAt(from) != '#') return false
@@ -143,6 +148,21 @@ object HtmlEntities {
     true
   }
 
+  /** Index of the ';' ending a reference that starts at `s(amp) == '&'`,
+    * or -1 when no ';' comes before a space, '&', '<' or `maxRef` chars.
+    */
+  private def refEnd(s: String, amp: Int): Int = {
+    var j = amp + 1
+    val lim = math.min(s.length, amp + 1 + maxRef + 1)
+    while (j < lim) {
+      val c = s.charAt(j)
+      if (c == ';') return j
+      if (c == '&' || c == '<' || Character.isWhitespace(c)) return -1
+      j += 1
+    }
+    -1
+  }
+
   def compute(s: String): UTF8String = {
     var i = s.indexOf('&')
     if (i < 0) return UTF8String.fromString(s)
@@ -152,16 +172,7 @@ object HtmlEntities {
       val c = s.charAt(i)
       if (c != '&') { sb.append(c); i += 1 }
       else {
-        // find the terminating ';' within range
-        var semi = -1
-        var j = i + 1
-        val lim = math.min(s.length, i + 1 + maxRef + 1)
-        while (semi < 0 && j < lim) {
-          val cj = s.charAt(j)
-          if (cj == ';') semi = j
-          else if (cj == '&' || cj == '<' || Character.isWhitespace(cj)) j = lim
-          else j += 1
-        }
+        val semi = refEnd(s, i)
         if (semi < 0) { sb.append("&amp;"); i += 1 }
         else if (isXmlNative(s, i + 1, semi) || isNumericRef(s, i + 1, semi)) {
           sb.append(s, i, semi + 1); i = semi + 1
@@ -173,4 +184,27 @@ object HtmlEntities {
     }
     UTF8String.fromString(sb.toString)
   }
+
+  /** Appends what the reference at `s(amp) == '&'` reads as once `compute`
+    * has run and an XML parser has decoded the result — its character, or
+    * a literal '&' — and returns the index after it. An invalid numeric
+    * code point (zero, a surrogate, above U+10FFFF) reads as U+FFFD.
+    */
+  private[graft] def decode(s: String, amp: Int, sb: java.lang.StringBuilder): Int = {
+    val semi = refEnd(s, amp)
+    val cp = if (semi < 0) -1 else codePoint(s, amp + 1, semi)
+    if (cp < 0) { sb.append('&'); amp + 1 }
+    else { sb.appendCodePoint(cp); semi + 1 }
+  }
+
+  private def codePoint(s: String, from: Int, to: Int): Int =
+    if (isNumericRef(s, from, to)) {
+      val hex = s.charAt(from + 1) == 'x' || s.charAt(from + 1) == 'X'
+      val v = java.lang.Long.parseLong(
+        s.substring(if (hex) from + 2 else from + 1, to), if (hex) 16 else 10)
+      if (v == 0 || v > 0x10FFFF || (v >= 0xD800 && v <= 0xDFFF)) 0xFFFD else v.toInt
+    } else {
+      val name = s.substring(from, to)
+      xmlNative.getOrElse(name, entities.getOrElse(name, -1))
+    }
 }

@@ -20,104 +20,32 @@ import org.apache.spark.sql.functions._
   */
 object OohExtractors {
 
-  /** HTML-in-CDATA payloads re-parsed per row (reference `getDocument`,
-    * index.js:3-5). Spark's `xpath` needs well-formed, single-rooted XML;
-    * jsdom is lenient (SURVEY §1.4.1), so common HTML-not-XML patterns are
-    * normalized here before parsing:
-    *   - named HTML entities → numeric XML entities (`&nbsp;` et al);
-    *   - any remaining bare `&` → `&amp;` (negative lookahead keeps real
-    *     entities intact);
-    *   - void elements (`<br>`, `<hr>`, `<img …>`) self-closed;
-    * then wrap in a synthetic root so multi-element fragments parse.
-    */
-  /** Block tags whose start (or a container's close) implicitly ends an
-    * open `<p>` in the HTML5 tree builder — the subset occurring in OOH
-    * CDATA plus the table-row/cell tags (an open `<p>` inside a cell ends
-    * with the cell). `li` open/close also ends an open `p` (the p lives
-    * inside the li, which is about to end).
-    */
-  private val pBoundary =
-    "</?(?:h[1-6]|ul|ol|div|table|section|tr|td|th)[\\s>]|<p[\\s>]|</?li[\\s>]"
-
-  /** HTML5-style auto-close for the two unclosed tags real OOH exports
-    * contain (jsdom parses these fine; Spark's strict `xpath` does not):
-    *   - `<p>` closes at the next block/`<p>`/`<li>` boundary or end;
-    *   - `<li>` closes at the next `<li>`, the list's `</ul>`/`</ol>`, or
-    *     end.
-    * The tempered dot `(?:(?!stop).)*` can only end at the FIRST stop
-    * token: when that token is the tag's own close the fragment is
-    * already well-formed and the regex leaves it byte-identical; when it
-    * is a boundary, the close tag is inserted — exactly the tree
-    * builder's rule.
+  /** P2 `xpathSelect` (index.js:7-17): the text nodes `xp` selects in an
+    * HTML fragment column, in document order. The reference re-parses each
+    * CDATA payload with jsdom (`getDocument`, index.js:3-5), which is
+    * lenient (SURVEY §1.4.1); so is the native one-pass reader behind this,
+    * `html_texts` ([[HtmlTexts]]), which reads the raw fragment directly:
+    *   - an open `<p>` closes at the next `<p>`, `<li>`, heading, list,
+    *     `<div>`, `<section>` or table tag; an open `<li>` at the next `<li>`
+    *     of its list; an open `<td>`/`<th>` at the next cell, row or table
+    *     section; an open `<tr>` at the next row or section; an end tag
+    *     closes what is still open inside its element;
+    *   - void tags (`<br>`, `<img …>`, …) never take content, whatever
+    *     their attributes hold;
+    *   - HTML4 named, XML and numeric references decode; any other `&` is
+    *     literal text; CR and CRLF read as LF; names are case-insensitive.
+    * Divergences from jsdom: no other implied ends (`<hr>` does not close
+    * a `<p>`), no implied `<html>`/`<body>`/`<tbody>`, no reordering of
+    * misnested inline tags or of text a table holds outside its cells, a
+    * stray end tag is ignored, `/>` ends any element, `<script>`/`<style>`
+    * content is read as markup, and HTML5-only or semicolon-less references
+    * stay literal (full list at [[HtmlTexts.select]]).
     *
-    * The `<li>` stop set also halts on OPENING `<ul>`/`<ol>` tags while the
-    * lookahead does not accept them: an `<li>` that directly contains a
-    * nested list therefore never matches and is left byte-identical —
-    * well-formed nested lists must not have a stray `</li>` injected before
-    * their inner list. Known non-goals (both left untouched, as before):
-    * an explicitly closed `<p>` containing a block element (HTML5 itself
-    * reparents those), and an UNclosed `<li>` whose body starts a nested
-    * list.
+    * `xp` must be in the [[HtmlPath]] subset: `//` and `/` steps, a name or
+    * `*`, one `[@attr='v']` predicate, a final `text()`. Any other path is
+    * an analysis error naming the path.
     */
-  /** Stop/accept token sets for the table-cell and table-row auto-close
-    * rules (same tempered-dot mechanics as `<p>`/`<li>`): a cell ends at
-    * the next cell/row/section boundary or the table's close; a row at
-    * the next row/section boundary or the table's close. The stop sets
-    * also halt on an OPENING `<table>` that the lookaheads do not accept:
-    * an unclosed cell directly containing a nested table is left
-    * byte-identical (the nested-list non-goal, table edition).
-    */
-  private val cellStop =
-    "</td>|</th>|<td[\\s>]|<th[\\s>]|</?tr[\\s>]|</?table[\\s>]|</?(?:thead|tbody|tfoot)[\\s>]"
-  private val cellEnd =
-    "<td[\\s>]|<th[\\s>]|</?tr[\\s>]|</table[\\s>]|</?(?:thead|tbody|tfoot)[\\s>]"
-  private val trStop =
-    "</tr>|<tr[\\s>]|</?table[\\s>]|</?(?:thead|tbody|tfoot)[\\s>]"
-  private val trEnd =
-    "<tr[\\s>]|</table[\\s>]|</?(?:thead|tbody|tfoot)[\\s>]"
-
-  private[graft] def autoClose(c: Column): Column = {
-    val p = regexp_replace(
-      c,
-      s"(?s)<p(\\s[^>]*)?>((?:(?!</p>|$pBoundary).)*)(?=$pBoundary|$$)",
-      "<p$1>$2</p>")
-    val li = regexp_replace(
-      p,
-      "(?s)<li(\\s[^>]*)?>((?:(?!</li>|<li[\\s>]|</?(?:ul|ol)[\\s>]).)*)(?=<li[\\s>]|</(?:ul|ol)>|$)",
-      "<li$1>$2</li>")
-    // cells before rows: the injected `</td>` is in place before the
-    // `<tr>` rule scans, so a mis-nested `<tr><td>a<tr>` heals outside-in
-    val cells = regexp_replace(
-      li,
-      s"(?s)<(td|th)(\\s[^>]*)?>((?:(?!$cellStop).)*)(?=$cellEnd|$$)",
-      "<$1$2>$3</$1>")
-    regexp_replace(
-      cells,
-      s"(?s)<tr(\\s[^>]*)?>((?:(?!$trStop).)*)(?=$trEnd|$$)",
-      "<tr$1>$2</tr>")
-  }
-
-  /** The HTML5 void-element set: start tags that never take content and
-    * need self-closing for XML.
-    */
-  private val voidTags =
-    "br|hr|wbr|img|input|col|embed|source|track|area|base|link|meta|param"
-
-  def htmlAsXml(c: Column): Column = {
-    // one compiled pass decodes ALL HTML4 named entities to numeric form
-    // and escapes every other ampersand — see graft.exprs.HtmlEntities
-    // (replaces the former per-entity regexp_replace chain)
-    val entities = call_function("html_entities", c)
-    val voids = regexp_replace(
-      regexp_replace(entities, s"<($voidTags)\\s*>", "<$1/>"),
-      s"<($voidTags)\\s+([^>/]*)>", "<$1 $2/>")
-    concat(lit("<root>"), autoClose(voids), lit("</root>"))
-  }
-
-  /** P2 `xpathSelect` (index.js:7-17): evaluate an XPath over an HTML
-    * fragment column, all matches in document order.
-    */
-  def htmlXpathAll(c: Column, xp: String): Column = xpath(htmlAsXml(c), lit(xp))
+  def htmlXpathAll(c: Column, xp: String): Column = call_function("html_texts", c, lit(xp))
 
   /** P3 `cdataXpath` (index.js:23-38): concatenate every match's text, in
     * document order, with no separator.
@@ -235,12 +163,19 @@ object OohExtractors {
     * value (the reference would throw).
     */
   def topIndustries(sectionBody: Column): Column = {
-    val a = htmlXpathAll(sectionBody, "//td/text()")
-    map_from_entries(
-      filter(
-        transform(a, (x, i) =>
-          when(i % 2 === 0,
-            struct(x.as("key"), regexp_replace(get(a, i + 1), "%", "").as("value")))),
-        e => e.isNotNull))
+    // One evaluation of the cell array per row: the fold holds an even
+    // (industry) cell in `key` until its odd (percent) partner arrives.
+    val entries = "array<struct<key:string,value:string>>"
+    val none = lit(null).cast("string")
+    def entry(k: Column, v: Column): Column = array(struct(k.as("key"), v.as("value")))
+    map_from_entries(aggregate(
+      htmlXpathAll(sectionBody, "//td/text()"),
+      struct(array().cast(entries).as("entries"), none.as("key")),
+      (acc, x) => when(acc("key").isNull, struct(acc("entries").as("entries"), x.as("key")))
+        .otherwise(struct(
+          concat(acc("entries"), entry(acc("key"), regexp_replace(x, "%", ""))).as("entries"),
+          none.as("key"))),
+      acc => when(acc("key").isNull, acc("entries"))
+        .otherwise(concat(acc("entries"), entry(acc("key"), none)))))
   }
 }

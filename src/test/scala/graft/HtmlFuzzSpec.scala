@@ -7,14 +7,19 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.exprs.OohExtractors
+import graft.pipeline.OohPipeline
 
-/** Property-fuzz of the jsdom-grade HTML leniency (reference index.js:3-5):
-  * [[OohExtractors.htmlAsXml]] must turn ANY fragment from the supported
-  * tag-soup grammar — unclosed `<p>`/`<li>`/`<td>`/`<th>`/`<tr>`, void
-  * tags, raw ampersands, HTML4 entities, mis-nested rows like
-  * `<tr><td>a<tr>` — into well-formed XML, and the auto-close rewrite must
-  * be IDEMPOTENT (a healed fragment passes through byte-identical, so
-  * re-processing stored output can never corrupt it).
+/** Property-fuzz of the jsdom-grade HTML leniency (reference index.js:3-5).
+  * The native reader `html_texts` (behind [[OohExtractors.htmlXpathAll]])
+  * must select exactly what the regex-heal + Xerces + XPath oracle
+  * ([[HtmlOracle]]) selects, for every selector the specs use, on every
+  * fragment from the supported tag-soup grammar — unclosed
+  * `<p>`/`<li>`/`<td>`/`<th>`/`<tr>`, void tags, raw ampersands, HTML4
+  * entities, mis-nested rows like `<tr><td>a<tr>` — and on the fixture's
+  * sections. For that comparison to mean anything the oracle itself is
+  * pinned: [[HtmlOracle.htmlAsXml]] turns every fragment into well-formed
+  * XML, and its auto-close rewrite is IDEMPOTENT (a healed fragment passes
+  * through byte-identical).
   *
   * The grammar is the supported-leniency envelope, deliberately excluding
   * the documented non-goals (`<p>` directly containing a block element,
@@ -95,10 +100,10 @@ class HtmlFuzzSpec extends SparkSpec {
   test(s"htmlAsXml: $nFragments fuzzed tag-soup fragments all parse as XML") {
     import spark.implicits._
     val out = samples.toDF("html")
-      .select(OohExtractors.htmlAsXml(col("html")).as("xml"),
+      .select(HtmlOracle.htmlAsXml(col("html")).as("xml"),
         // Spark's strict xpath is the consumer the leniency exists for —
         // run it over every fragment so a parse failure fails THIS job
-        size(xpath(OohExtractors.htmlAsXml(col("html")), lit("//p"))).as("np"))
+        size(xpath(HtmlOracle.htmlAsXml(col("html")), lit("//p"))).as("np"))
       .collect()
     assert(out.length == nFragments)
     val dbf = DocumentBuilderFactory.newInstance()
@@ -119,8 +124,8 @@ class HtmlFuzzSpec extends SparkSpec {
     import spark.implicits._
     val diffs = samples.toDF("html")
       .select(
-        OohExtractors.autoClose(col("html")).as("once"),
-        OohExtractors.autoClose(OohExtractors.autoClose(col("html"))).as("twice"))
+        HtmlOracle.autoClose(col("html")).as("once"),
+        HtmlOracle.autoClose(HtmlOracle.autoClose(col("html"))).as("twice"))
       .where(col("once") =!= col("twice"))
       .collect()
     assert(diffs.isEmpty,
@@ -186,8 +191,8 @@ class HtmlFuzzSpec extends SparkSpec {
   private def assertAllParse(frags: Seq[String], tag: String): Unit = {
     import spark.implicits._
     val out = frags.toDF("html")
-      .select(OohExtractors.htmlAsXml(col("html")).as("xml"),
-        size(xpath(OohExtractors.htmlAsXml(col("html")), lit("//td"))).as("nc"))
+      .select(HtmlOracle.htmlAsXml(col("html")).as("xml"),
+        size(xpath(HtmlOracle.htmlAsXml(col("html")), lit("//td"))).as("nc"))
       .collect()
     val dbf = DocumentBuilderFactory.newInstance()
     val failures = out.flatMap { r =>
@@ -242,7 +247,7 @@ class HtmlFuzzSpec extends SparkSpec {
       "<LI>item",
       "<TD>cell")
     val diffs = nonGoals.toDF("html")
-      .select(col("html"), OohExtractors.autoClose(col("html")).as("healed"))
+      .select(col("html"), HtmlOracle.autoClose(col("html")).as("healed"))
       .where(col("html") =!= col("healed"))
       .collect()
     assert(diffs.isEmpty,
@@ -256,13 +261,60 @@ class HtmlFuzzSpec extends SparkSpec {
     // healing once via htmlAsXml, then check the root-stripped body is a
     // fixpoint of autoClose (no spurious closes injected into good HTML)
     val healed = samples.toDF("html")
-      .select(OohExtractors.htmlAsXml(col("html")).as("xml"))
+      .select(HtmlOracle.htmlAsXml(col("html")).as("xml"))
       .select(regexp_replace(col("xml"), "^<root>|</root>$", "").as("body"))
     val diffs = healed
-      .where(OohExtractors.autoClose(col("body")) =!= col("body"))
+      .where(HtmlOracle.autoClose(col("body")) =!= col("body"))
       .collect()
     assert(diffs.isEmpty,
       s"autoClose rewrote ${diffs.length} already-well-formed fragments; " +
         s"first:\n${diffs.headOption.map(_.getString(0)).getOrElse("")}")
+  }
+
+  // ---- differential: html_texts against the xpath oracle -------------------
+
+  /** Every selector the specs and the pipeline use, the corpora's own
+    * attribute values, and `//text()` (every text node).
+    */
+  private val selectors = Seq(
+    "//p/text()", "//p//text()", "//p[@class='x']/text()", "//p[@class=\"intro\"]/text()",
+    "//li/text()", "//li/p/text()", "//li//text()",
+    "//td/text()", "//td//text()", "//td/h4/text()", "//td//h4/text()", "//td/p/text()",
+    "//td[@class='num']/text()", "//tr//text()", "//tr/td/text()", "//tr/*/text()",
+    "//form/p/text()", "//h3/text()", "//text()")
+
+  private def assertSameAsOracle(frags: Seq[String], tag: String): Unit = {
+    import spark.implicits._
+    val cols = selectors.flatMap(xp =>
+      Seq(HtmlOracle.xpathAll(col("html"), xp), OohExtractors.htmlXpathAll(col("html"), xp)))
+    val rows = frags.toDF("html").select(col("html") +: cols: _*).collect()
+    assert(rows.length == frags.length)
+    val diffs = for {
+      r <- rows.toSeq
+      (xp, k) <- selectors.zipWithIndex
+      want = r.getSeq[String](1 + 2 * k)
+      got = r.getSeq[String](2 + 2 * k)
+      if want != got
+    } yield s"$xp on ${r.getString(0)}\n  oracle: $want\n  html_texts: $got"
+    assert(diffs.isEmpty,
+      s"$tag: ${diffs.length} (fragment, selector) pairs differ; first:\n" +
+        diffs.take(3).mkString("\n"))
+  }
+
+  test("html_texts equals the xpath oracle on the tag-soup, entity-heavy and table-torture corpora") {
+    assertSameAsOracle(samples, "tag soup")
+    assertSameAsOracle(tortureSamples(entityBlock, 600, 9000L), "entities")
+    assertSameAsOracle(tortureSamples(tortureTable, 600, 11000L), "tables")
+  }
+
+  test("html_texts equals the xpath oracle on the fixture templates' sections") {
+    val raw = OohPipeline.read(spark, OohPipeline.fixturePath)
+    val sections = Seq("summary_what_they_do", "summary_how_to_become_one",
+      "summary_work_environment", "summary_pay", "similar_occupations.section_body",
+      "work_environment.section_body", "how_to_become_one.section_body")
+    val frags = sections.flatMap(c =>
+      raw.select(col(c)).collect().toSeq.map(_.getString(0)).filter(_ != null))
+    assert(frags.length == 8 * sections.length, frags.length.toString)
+    assertSameAsOracle(frags, "fixture")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import graft.exprs.OohExtractors._
@@ -26,7 +26,7 @@ class OohExtractorsSpec extends SparkSpec {
     assert(one(cdataConcat(col("s"), "//p/text()"), "<div>nothing</div>") == "")
   }
 
-  test("htmlAsXml makes multi-rooted fragments with &nbsp; parseable") {
+  test("multi-rooted fragments with &nbsp; read without a synthetic root") {
     assert(one(cdataConcat(col("s"), "//p/text()"), "<p>a&nbsp;b</p><p>c</p>") == "a bc")
   }
 
@@ -37,6 +37,21 @@ class OohExtractorsSpec extends SparkSpec {
       "<p>a &amp; b</p><hr><p>c&mdash;d</p>") == "a & bc—d")
     assert(one(cdataConcat(col("s"), "//td/text()"),
       "<table><tr><td>x<img src=\"foo.png\"></td></tr></table>") == "x")
+  }
+
+  test("a void tag whose attribute holds '/' stays void (<img src=\"/images/x.png\">)") {
+    // the healed-XML path could not self-close it and failed the query
+    assert(one(htmlXpathAll(col("s"), "//p/text()"),
+      "<p>Photo <img src=\"/images/x.png\"> caption</p>") == Seq("Photo ", " caption"))
+  }
+
+  test("a path outside the html_texts subset fails analysis and names the path") {
+    import spark.implicits._
+    for (xp <- Seq("//p[2]", "/p/text()", "//p", "//p/text()/x", "//p[@class=x]/text()")) {
+      val e = intercept[AnalysisException](
+        Seq("<p>a</p>").toDF("s").select(htmlXpathAll(col("s"), xp)))
+      assert(e.getMessage.contains(xp), e.getMessage)
+    }
   }
 
   test("unclosed <p> auto-closes at the next block boundary or end (jsdom parity)") {
