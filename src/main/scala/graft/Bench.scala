@@ -165,9 +165,10 @@ object Bench {
   /** Integer-SECOND rendering floored at 1 (same no-zero rule as
     * [[dp1Floor]]) — the value-degradation rail for multi-second queries
     * when the full 1-dp board does not fit the driver's tail: relative
-    * error is bounded by the band cutoff (≤25% at the 2 s cutoff, vs
-    * unbounded if sub-second values degraded instead), and the 0.1 s
-    * resolution stays in the file line.
+    * error is bounded by the band cutoff (≤25% at the 2 s cutoff; the
+    * last band also degrades sub-second values, with unbounded error —
+    * see [[compactLine]]), and the 0.1 s resolution stays in the file
+    * line.
     */
   def secIntFloor(v: Double): String =
     if (v < 0) "-1" else math.max(Math.round(v), 1L).toString
@@ -215,14 +216,21 @@ object Bench {
     * inflate).
     *
     * Fitting 215 queries into the tail at the contract's `"unit":"sec"`:
-    * per-query values walk a PRECISION LADDER — every band keeps
-    * sub-second values at 0.1 s resolution (where integer seconds would
-    * mean unbounded relative error) and degrades multi-second values to
-    * integer seconds band by band (error bounded by round-half: ≤25% at
-    * the 2 s cutoff, ≤33% at the 1 s cutoff). On the measured round-21
-    * BEFORE board the 1 s-cutoff band renders 1982 chars; the
-    * higher-resolution bands fire whenever the board shrinks enough to
-    * fit. Full precision always lands in the file line.
+    * per-query values walk a PRECISION LADDER — the bands down to the
+    * 1 s cutoff keep sub-second values at 0.1 s resolution and degrade
+    * multi-second values to integer seconds band by band (error bounded
+    * by round-half: ≤25% at the 2 s cutoff, ≤33% at the 1 s cutoff). The
+    * LAST band (cutoff 0) is an all-integer rail: every sub-second value
+    * renders as 1, an unbounded relative error (0.04 s reads 25×), so
+    * per-query values on a line from that band must not be compared
+    * with a line from any other band; only "value", the sum of the true
+    * mins, stays exact. It fires only when the 1 s band does not fit —
+    * a board of today's 215 queries with two thirds of them sub-second
+    * does not (BenchLineSpec) — and keeps the per-query keys on the line
+    * instead of the floor's empty map. On the measured round-21 BEFORE
+    * board the 1 s-cutoff band renders 1982 chars; the higher-resolution
+    * bands fire whenever the board shrinks enough to fit. Full precision
+    * always lands in the file line.
     */
   def compactLine(stats: Seq[QStat], errors: Map[String, String],
       passes: Int, sfDir: String): String = {
@@ -431,9 +439,6 @@ object Bench {
     }
 
     val compact = compactLine(stats, errors, passes, sfDir)
-    if (compact.length > fitBudget)
-      System.err.println(s"WARNING: bench stdout line is ${compact.length} chars; " +
-        "the driver keeps only a 2000-char tail — shorten keys/precision before it truncates")
     // Durable full-detail copy: the driver's stdout capture keeps only a
     // 2000-char tail, so the full-name full-precision line lives in files.
     val full = fullLine(stats, errors, passes, sfDir, canary.toSeq,

@@ -178,25 +178,47 @@ object HtmlTexts {
         HtmlTexts(cs.head, cs(1).eval().toString)
       })
 
-  /** Start tags that close an open `<p>`: the HTML5 tree builder's block
+  // Tag classes, as bit flags: the reader looks each tag name up once in
+  // [[tagClass]] and tests masks from then on.
+  /** A start tag that closes an open `<p>`: the HTML5 tree builder's block
     * boundaries that occur in OOH sections, plus the list and table tags.
     */
-  private val closesP = Set("h1", "h2", "h3", "h4", "h5", "h6", "ul", "ol", "div",
-    "table", "section", "tr", "td", "th", "p", "li")
-  private val p = Set("p")
-  private val li = Set("li")
-  private val tr = Set("tr")
-  private val cells = Set("td", "th")
-  private val sections = Set("thead", "tbody", "tfoot")
+  private final val ClosesP = 1
+  private final val P = 2
+  private final val Li = 4
+  private final val ListTag = 8 // ul, ol
+  private final val Tr = 16
+  private final val Cell = 32 // td, th
+  private final val Section = 64 // thead, tbody, tfoot
+  private final val Table = 128
+  private final val Void = 256
   /** Containers an implied close never reaches past. An open `<p>` needs
     * none: every container start tag closes it first.
     */
-  private val pScope = Set.empty[String]
-  private val liScope = Set("ul", "ol", "td", "th", "table")
-  private val rowScope = Set("tr", "table")
-  private val tableScope = Set("table")
-  private val voidTags = Set("br", "hr", "wbr", "img", "input", "col", "embed", "source",
-    "track", "area", "base", "link", "meta", "param")
+  private final val LiScope = ListTag | Cell | Table
+  private final val RowScope = Tr | Table
+
+  private val tagClass: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer]
+    def add(flags: Int, names: String*): Unit =
+      names.foreach(n => m.put(n, Integer.valueOf(flags)))
+    add(ClosesP, "h1", "h2", "h3", "h4", "h5", "h6", "div", "section")
+    add(ClosesP | P, "p")
+    add(ClosesP | Li, "li")
+    add(ClosesP | ListTag, "ul", "ol")
+    add(ClosesP | Tr, "tr")
+    add(ClosesP | Cell, "td", "th")
+    add(ClosesP | Table, "table")
+    add(Section, "thead", "tbody", "tfoot")
+    add(Void, "br", "hr", "wbr", "img", "input", "col", "embed", "source",
+      "track", "area", "base", "link", "meta", "param")
+    m
+  }
+
+  private def tagFlags(name: String): Int = {
+    val f = tagClass.get(name)
+    if (f == null) 0 else f.intValue
+  }
 
   /** The text nodes of `html` that `path` selects, in document order.
     *
@@ -243,6 +265,8 @@ object HtmlTexts {
     val out = ArrayBuffer.empty[Any]
     private val n = s.length
     private var names = new Array[String](16)
+    /** The [[tagClass]] flags of each open element. */
+    private var flags = new Array[Int](16)
     private var here = new Array[Long](16)
     private var upto = new Array[Long](16)
     private var depth = 0
@@ -285,16 +309,18 @@ object HtmlTexts {
         text.setLength(0)
       }
 
-    private def push(name: String): Unit = {
+    private def push(name: String, f: Int): Unit = {
       flush()
       if (depth + 1 == names.length) {
         names = java.util.Arrays.copyOf(names, names.length * 2)
+        flags = java.util.Arrays.copyOf(flags, names.length)
         here = java.util.Arrays.copyOf(here, names.length)
         upto = java.util.Arrays.copyOf(upto, names.length)
       }
       val h = path.enter(name, attrs, here(depth), upto(depth))
       depth += 1
       names(depth) = name
+      flags(depth) = f
       here(depth) = h
       upto(depth) = upto(depth - 1) | h
       selecting = path.selectsText(h, upto(depth))
@@ -306,15 +332,15 @@ object HtmlTexts {
       selecting = path.selectsText(here(d), upto(d))
     }
 
-    /** Close the nearest open element named in `targets`, unless an
-      * element in `scope` comes first.
+    /** Close the nearest open element of a class in `targets`, unless an
+      * element of a class in `scope` comes first.
       */
-    private def closeOpen(targets: Set[String], scope: Set[String]): Unit = {
+    private def closeOpen(targets: Int, scope: Int): Unit = {
       var d = depth
       while (d > 0) {
-        val e = names(d)
-        if (targets(e)) { popTo(d - 1); return }
-        if (scope(e)) return
+        val f = flags(d)
+        if ((f & targets) != 0) { popTo(d - 1); return }
+        if ((f & scope) != 0) return
         d -= 1
       }
     }
@@ -345,16 +371,17 @@ object HtmlTexts {
       attrs.clear()
       val end = attributes(nameEnd, path.hasPredicates)
       if (end < 0) return n // unterminated tag: dropped, as HTML5 does at EOF
-      if (closesP(name)) closeOpen(p, pScope)
-      if (name == "li") closeOpen(li, liScope)
-      else if (cells(name)) closeOpen(cells, rowScope)
-      else if (name == "tr" || sections(name)) {
-        closeOpen(cells, rowScope)
-        closeOpen(tr, tableScope)
-        if (sections(name)) closeOpen(sections, tableScope)
+      val f = tagFlags(name)
+      if ((f & ClosesP) != 0) closeOpen(P, 0)
+      if ((f & Li) != 0) closeOpen(Li, LiScope)
+      else if ((f & Cell) != 0) closeOpen(Cell, RowScope)
+      else if ((f & (Tr | Section)) != 0) {
+        closeOpen(Cell, RowScope)
+        closeOpen(Tr, Table)
+        if ((f & Section) != 0) closeOpen(Section, Table)
       }
-      if (voidTags(name) || selfClosing) flush()
-      else push(name)
+      if ((f & Void) != 0 || selfClosing) flush()
+      else push(name, f)
       end
     }
 

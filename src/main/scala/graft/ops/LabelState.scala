@@ -396,8 +396,10 @@ object LabelState {
     * Lazy in all modes (the bounded edge collect right after is the
     * materializing action, so no extra job); semantics are identical
     * across modes — this dial trades fault-tolerance against speed only.
+    * Any other value is an IllegalArgumentException: a misspelled
+    * `durable` must not quietly drop the fault tolerance it asked for.
     */
-  private def spliceMaterialize(df: DataFrame): DataFrame = {
+  private[graft] def spliceMaterialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.splice.checkpoint").getOrElse("local") match {
       case "none" => df
@@ -408,7 +410,9 @@ object LabelState {
         ConnectedComponents.durable(spark,
           graft.util.TmpDirs.sessionCheckpointDir(spark))
         df.checkpoint(false)
-      case _ => df.localCheckpoint(false)
+      case "local" => df.localCheckpoint(false)
+      case other => throw new IllegalArgumentException(
+        s"spark.graft.splice.checkpoint must be none, local or durable, not '$other'")
     }
   }
 

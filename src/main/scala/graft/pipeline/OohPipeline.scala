@@ -1,7 +1,13 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
 import graft.exprs.OohExtractors._
@@ -71,8 +77,48 @@ object OohPipeline {
     * Military Careers guard (P11, index.js:146-148) nulling every
     * post-guard column, plus a `warnings` data-quality column standing in
     * for the reference's cardinality log line (index.js:33-35).
+    *
+    * The projection is analyzed once per session, not once per call: the
+    * TEMPLATE is [[definition]] analyzed over an empty `LocalRelation` with
+    * `raw`'s schema. Each call swaps `raw`'s analyzed plan in for that
+    * leaf, maps the leaf's attributes to `raw`'s output, gives every
+    * output alias a fresh id (so two results self-join like two directly
+    * analyzed frames) and wraps the plan as already analyzed. The template
+    * is keyed on `raw`'s schema and a snapshot of the session's confs
+    * (`spark.conf.getAll`): ANSI mode, the session time zone and other
+    * confs shape the analyzed plan, so a different key builds a new
+    * template in place of the old. Each live session holds one entry,
+    * dropped once its SparkContext has stopped (purged on the next call).
     */
   def occupations(raw: DataFrame): DataFrame = {
+    val spark = raw.sparkSession
+    val child = raw.queryExecution.analyzed
+    val confs = spark.conf.getAll
+    templates.keySet.removeIf(_.sparkContext.isStopped)
+    val t = templates.compute(spark, (_, old) =>
+      if (old != null && old.schema == child.schema && old.confs == confs) old
+      else Template(child.schema, confs, definition(
+        PlanBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(child.schema))))
+        .queryExecution.analyzed))
+    val Project(list, leaf) = t.plan: @unchecked
+    val toChild = AttributeMap(leaf.output.zip(child.output))
+    val rebound = list.map(_.transform { case a: Attribute => toChild.getOrElse(a, a) } match {
+      case a: Alias => a.newInstance()
+      case n: NamedExpression => n
+    })
+    PlanBridge.ofAnalyzed(spark, Project(rebound, child))
+  }
+
+  /** The analyzed [[definition]] for one schema and conf snapshot. */
+  private[graft] final case class Template(
+      schema: StructType, confs: Map[String, String], plan: LogicalPlan)
+
+  private[graft] val templates = new ConcurrentHashMap[SparkSession, Template]
+
+  /** The definition of [[occupations]]; analyzed on every call, so
+    * callers go through [[occupations]], which analyzes it once.
+    */
+  private[graft] def definition(raw: DataFrame): DataFrame = {
     val military = col("title") === "Military Careers"
     def guarded(c: Column): Column = when(!military, c)
 

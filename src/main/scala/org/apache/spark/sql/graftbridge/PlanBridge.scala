@@ -13,6 +13,16 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** [[ofRows]] for a plan that is already resolved and checked: marks it
+    * analyzed, so the analyzer hands it back untouched instead of running
+    * its rule batches again (graft.pipeline.OohPipeline re-binds one
+    * analyzed projection to each new scan).
+    */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
+
   /** Column ↔ Expression bridging (Spark 4's Column wraps a ColumnNode, so
     * direct construction from a Catalyst Expression goes through the
     * `private[sql]` ExpressionUtils). Used to drive Spark's own

@@ -136,6 +136,21 @@ class BenchLineSpec extends AnyFunSuite {
       s"sub-second values must keep 0.1 s resolution: $line")
   }
 
+  test("precision ladder: sub-second values keep 0.1 s down to the 1 s band; only the last band floors them") {
+    // N sub-second queries: at 0.1 s resolution each entry is `"q100":0.4,`
+    // (11 chars), so 170 fit the 1 s band and 200 do not
+    def board(n: Int) = (0 until n).map(i => Bench.QStat(s"q${100 + i}_sub", 0.5, 0.42, 0.9))
+    val fits = Bench.compactLine(board(170), Map.empty, 3, "sf")
+    assert(fits.length <= Bench.fitBudget, s"${fits.length} chars")
+    assert(fits.contains(""""q100":0.4,""") && fits.contains(""""q269":0.4}"""), fits.take(200))
+    // the all-integer rail keeps every key but renders 0.42 s as 1; the
+    // total still sums the true mins (200 x 0.42)
+    val rail = Bench.compactLine(board(200), Map.empty, 3, "sf")
+    assert(rail.length <= Bench.fitBudget, s"${rail.length} chars")
+    assert(rail.contains(""""q100":1,""") && rail.contains(""""q299":1}"""), rail.take(200))
+    assert(rail.contains(""""value":84,"""), rail.take(80))
+  }
+
   test("file line carries the per-pass fixed-cost canary for box-drift attribution") {
     val stats = Seq(Bench.QStat("q1_agg", 12.0, 1.5, 99.0))
     // one canary sample per pass, full precision, stdout line untouched

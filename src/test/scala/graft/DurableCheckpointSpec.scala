@@ -88,4 +88,17 @@ class DurableCheckpointSpec extends SparkSpec {
     // checkpoint location (ConnectedComponents.durable refuses redirects)
     before.foreach(b => assert(after.get == b))
   }
+
+  test("an unknown spark.graft.splice.checkpoint value is rejected, not read as local") {
+    val key = "spark.graft.splice.checkpoint"
+    val df = spark.range(3).toDF("node")
+    spark.conf.set(key, "durabel")
+    try {
+      val e = intercept[IllegalArgumentException](graft.ops.LabelState.spliceMaterialize(df))
+      for (v <- Seq("durabel", "none", "local", "durable"))
+        assert(e.getMessage.contains(v), e.getMessage)
+      spark.conf.set(key, "none")
+      assert(graft.ops.LabelState.spliceMaterialize(df) eq df)
+    } finally spark.conf.unset(key)
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import java.util.Locale
 import javax.xml.parsers.DocumentBuilderFactory
+
+import scala.util.matching.Regex
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -25,7 +28,8 @@ import graft.pipeline.OohPipeline
   * the documented non-goals (`<p>` directly containing a block element,
   * an unclosed `<li>` whose body starts a nested list, uppercase tags) —
   * those are left byte-identical by design and need jsdom's full tree
-  * builder to heal.
+  * builder to heal. Mixed-case tags are still checked: html_texts reads
+  * them against the oracle's answer for the lower-cased fragment.
   */
 class HtmlFuzzSpec extends SparkSpec {
 
@@ -283,11 +287,14 @@ class HtmlFuzzSpec extends SparkSpec {
     "//td[@class='num']/text()", "//tr//text()", "//tr/td/text()", "//tr/*/text()",
     "//form/p/text()", "//h3/text()", "//text()")
 
-  private def assertSameAsOracle(frags: Seq[String], tag: String): Unit = {
+  /** html_texts reads each fragment `f`; the oracle reads `oracleInput(f)`. */
+  private def assertSameAsOracle(frags: Seq[String], tag: String,
+      oracleInput: String => String = identity): Unit = {
     import spark.implicits._
     val cols = selectors.flatMap(xp =>
-      Seq(HtmlOracle.xpathAll(col("html"), xp), OohExtractors.htmlXpathAll(col("html"), xp)))
-    val rows = frags.toDF("html").select(col("html") +: cols: _*).collect()
+      Seq(HtmlOracle.xpathAll(col("oracleInput"), xp), OohExtractors.htmlXpathAll(col("html"), xp)))
+    val rows = frags.map(f => (f, oracleInput(f))).toDF("html", "oracleInput")
+      .select(col("html") +: cols: _*).collect()
     assert(rows.length == frags.length)
     val diffs = for {
       r <- rows.toSeq
@@ -305,6 +312,28 @@ class HtmlFuzzSpec extends SparkSpec {
     assertSameAsOracle(samples, "tag soup")
     assertSameAsOracle(tortureSamples(entityBlock, 600, 9000L), "entities")
     assertSameAsOracle(tortureSamples(tortureTable, 600, 11000L), "tables")
+  }
+
+  private val tagName = "</?[A-Za-z][A-Za-z0-9]*".r
+
+  private def lowerTags(f: String): String =
+    tagName.replaceAllIn(f, m => Regex.quoteReplacement(m.matched.toLowerCase(Locale.ROOT)))
+
+  test("html_texts reads mixed-case tags as their lower-case form through every implied close") {
+    // each implied-close rule (p, li, cells, rows, table sections) and a
+    // void tag, written in mixed case; the oracle's regexes and its XML
+    // parser are case-sensitive, so it reads the lower-cased fragment
+    val rules = Seq(
+      "<P>a<P class=\"intro\">b<DIV>c</Div><H3>h</h3><Ul><Li>d<P>in li<Li>e<BR>f</UL>",
+      "<p>x<TABLE><TR><TD>a<Td>b<TR><TH>c<td>d</Table>",
+      "<Table><Tr><TD>a<TBODY><tR><Td>x<BR/>y<Br>z<TR><TH>w</TBody><TFOOT><TR><Td>t</tfoot></TABLE>",
+      "<OL><LI>one</li><lI>two<LI>three</ol><p>tail<TABLE><tr><TD>c</TD></TR></table>")
+    val rng = new scala.util.Random(12000L)
+    def recase(f: String): String = tagName.replaceAllIn(f, m =>
+      Regex.quoteReplacement(m.matched.map(c => if (rng.nextBoolean()) c.toUpper else c)))
+    val mixed = rules ++ (samples.take(400) ++ tortureSamples(tortureTable, 300, 11000L)).map(recase)
+    assert(mixed.count(f => lowerTags(f) != f) > mixed.length / 2)
+    assertSameAsOracle(mixed, "mixed case", oracleInput = lowerTags)
   }
 
   test("html_texts equals the xpath oracle on the fixture templates' sections") {

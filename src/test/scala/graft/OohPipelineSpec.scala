@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Row
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.lit
 
 import graft.pipeline.OohPipeline
 
@@ -102,5 +107,114 @@ class OohPipelineSpec extends SparkSpec {
     val de = ds.collect().find(_.title == "Data Engineers").get
     assert(de.pay.get == Map("data engineers" -> 50.0, "junior data engineers" -> 35.5))
     assert(ds.collect().find(_.title == "Military Careers").get.description.isEmpty)
+  }
+
+  // ---- the analyzed template behind occupations ----------------------------
+
+  private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.getString(0))
+
+  /** The fixture with every title but Military Careers renamed and the
+    * occupations in reverse order.
+    */
+  private lazy val secondFile: String = {
+    val xml = new String(Files.readAllBytes(Paths.get(OohPipeline.fixturePath)), UTF_8)
+    val body = "(?s)<occupation>.*?</occupation>".r.findAllIn(xml).toSeq.reverse
+      .map(_.replaceAll("(?<!Military Careers)</title>", " II</title>"))
+    val f = graft.util.TmpDirs.scratch("graft_ooh_second_").resolve("second.xml")
+    Files.write(f, body.mkString("<compilation>\n", "\n", "\n</compilation>\n").getBytes(UTF_8))
+    f.toString
+  }
+
+  test("template: rows and schema match the definition analyzed directly, on two files") {
+    for (path <- Seq(OohPipeline.fixturePath, secondFile)) {
+      val raw = OohPipeline.read(spark, path)
+      val got = OohPipeline.occupations(raw)
+      val want = OohPipeline.definition(raw)
+      assert(got.schema == want.schema)
+      assert(rows(got) == rows(want), path)
+      assert(rows(got).length == 8)
+    }
+    assert(rows(OohPipeline.occupations(OohPipeline.read(spark, secondFile)))
+      .map(_.getString(0)).contains("Data Engineers II"))
+  }
+
+  test("template: a second call is not analyzed again") {
+    OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath))
+    val template = OohPipeline.templates.get(spark)
+    val qe = OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath)).queryExecution
+    assert(qe.analyzed eq qe.logical)
+    assert(OohPipeline.templates.get(spark) eq template, "the template was built again")
+  }
+
+  test("template: two occupations frames self-join on title") {
+    val a = OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath))
+    val b = OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath))
+    assert(a.join(b, "title").count() == 8)
+    assert(a.join(b, a("medianPayAnnual") <=> b("medianPayAnnual") && a("title") === b("title"))
+      .count() == 8)
+    val raw = OohPipeline.read(spark, OohPipeline.fixturePath)
+    assert(OohPipeline.occupations(raw).join(OohPipeline.occupations(raw), "title").count() == 8)
+  }
+
+  test("template: a conf flip builds a new template (spark.sql.ansi.enabled)") {
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    def plans(): (LogicalPlan, LogicalPlan) = {
+      val raw = OohPipeline.read(spark, OohPipeline.fixturePath)
+      (OohPipeline.occupations(raw).queryExecution.analyzed.canonicalized,
+        OohPipeline.definition(raw).queryExecution.analyzed.canonicalized)
+    }
+    val (asIs, asIsDirect) = plans()
+    assert(asIs == asIsDirect)
+    spark.conf.set(key, (!before.toBoolean).toString)
+    try {
+      val (flipped, flippedDirect) = plans()
+      assert(flipped == flippedDirect)
+      assert(flipped != asIs, "the ANSI flip did not change the analyzed plan")
+    } finally spark.conf.set(key, before)
+    assert(plans()._1 == asIs)
+  }
+
+  test("template: a raw frame with another schema still gives correct rows") {
+    val raw = OohPipeline.read(spark, OohPipeline.fixturePath)
+    val wider = raw.select((lit(1).as("extra") +: raw.columns.reverse.toSeq.map(raw(_))): _*)
+    val got = OohPipeline.occupations(wider)
+    assert(rows(got) == rows(OohPipeline.definition(wider)))
+    assert(rows(got) == rows(OohPipeline.occupations(raw)))
+  }
+
+  test("template: stopping a session drops its entry") {
+    // a stopped SparkContext cannot be shared with the other specs: the
+    // check runs in its own JVM
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ MultiJvmHarness.addOpens ++
+      Seq("-Xmx1g", "-Dspark.ui.enabled=false", "-cp", System.getProperty("java.class.path"),
+        "graft.OohTemplateStopCheck")
+    val log = java.io.File.createTempFile("graft_ooh_stop_", ".log")
+    log.deleteOnExit()
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log).start()
+    assert(proc.waitFor(5, java.util.concurrent.TimeUnit.MINUTES), "check did not finish")
+    val out = new String(Files.readAllBytes(log.toPath), UTF_8)
+    assert(proc.exitValue() == 0 && out.contains("template dropped"), out.takeRight(2000))
+  }
+}
+
+/** Run by [[OohPipelineSpec]] in its own JVM: a stopped session's template
+  * entry is gone after the next session's first call.
+  */
+object OohTemplateStopCheck {
+  def main(args: Array[String]): Unit = {
+    def occupations(s: SparkSession): Long =
+      OohPipeline.occupations(OohPipeline.read(s, OohPipeline.fixturePath)).count()
+    val first = GraftSession.create("ooh-template-stop-1", cores = 1)
+    occupations(first)
+    require(OohPipeline.templates.containsKey(first), "no template for a live session")
+    first.stop()
+    val second = GraftSession.create("ooh-template-stop-2", cores = 1)
+    try {
+      occupations(second)
+      require(!OohPipeline.templates.containsKey(first), "the stopped session's template is kept")
+      require(OohPipeline.templates.size == 1, s"${OohPipeline.templates.size} templates")
+    } finally second.stop()
+    println("template dropped")
   }
 }
