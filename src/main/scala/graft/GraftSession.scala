@@ -22,8 +22,10 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
+  val CleanCheckpoints = "spark.cleaner.referenceTracking.cleanCheckpoints"
+
   def create(appName: String = "graft", cores: Int = cpus): SparkSession = {
-    val spark = SparkSession
+    val builder = SparkSession
       .builder()
       .appName(appName)
       // Engine extension surface: native Catalyst expressions, callable
@@ -56,7 +58,12 @@ object GraftSession {
       // Managed-table warehouse (bucketed tables) outside the repo tree.
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
-      .getOrCreate()
+    // The context cleaner deletes a reliable checkpoint's files once its
+    // RDD is unreachable only with this set (the `durable` splice mode
+    // checkpoints on every delete-serve); a value the JVM's spark.*
+    // properties or spark-submit already carry wins.
+    if (!sys.props.contains(CleanCheckpoints)) builder.config(CleanCheckpoints, "true")
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

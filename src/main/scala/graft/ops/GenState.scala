@@ -930,6 +930,10 @@ object GenState {
     * left racing a caller's next step), then rethrows the first failure —
     * same observable behavior as the sequential loop: the merge aborts,
     * the generation stays incomplete, recovery redoes it wholesale.
+    * A caller interrupt keeps that drain going for at most
+    * [[InterruptGraceMs]] more: a write that has not settled by then (a hung
+    * FS call) is interrupted (`shutdownNow`) and left behind, and the
+    * caller gets an InterruptedException instead of blocking forever.
     * Thread-locals: pool threads are created at submit time from the
     * calling thread, so Spark's inheritable job-group/description
     * properties carry over; fencedParquet sets its own description per
@@ -942,36 +946,58 @@ object GenState {
       val futs = tasks.map(t =>
         pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = t() }))
       var firstFailure: Option[Throwable] = None
-      var interrupted = false
+      // set by the first caller interrupt: the drain's end (System.nanoTime)
+      var deadline: Option[Long] = None
       futs.foreach { fut =>
         // wait for EVERY task even on failure or caller interrupt — an
         // abandoned still-running write racing the caller's abort path
         // would break the wait-for-every-task contract this method
         // documents. An interrupt is recorded (and the flag re-set after
-        // the drain) but the drain keeps going: the remaining fut.get()
-        // calls must not throw InterruptedException immediately, so each
-        // retry loop below swallows further interrupts until its future
-        // settles.
+        // the drain) and only bounds the rest of the drain: the remaining
+        // fut.get() calls must not throw InterruptedException immediately,
+        // so each retry loop below swallows further interrupts until its
+        // future settles or the grace period is over.
         var done = false
         while (!done) {
-          try { fut.get(); done = true }
-          catch {
+          try {
+            deadline match {
+              case None => fut.get()
+              case Some(end) =>
+                fut.get(math.max(0L, end - System.nanoTime()), java.util.concurrent.TimeUnit.NANOSECONDS)
+            }
+            done = true
+          } catch {
             case e: java.util.concurrent.ExecutionException =>
               if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
               done = true
             case _: InterruptedException =>
-              interrupted = true
+              if (deadline.isEmpty)
+                deadline = Some(System.nanoTime() + InterruptGraceMs * 1000000L)
+            case _: java.util.concurrent.TimeoutException =>
+              pool.shutdownNow()
+              Thread.currentThread().interrupt()
+              val e = new InterruptedException(
+                "GenState.inParallel: caller interrupted; a concurrent table write " +
+                  s"did not settle within $InterruptGraceMs ms and was abandoned")
+              firstFailure.foreach(e.addSuppressed)
+              throw e
           }
         }
       }
-      if (interrupted) Thread.currentThread().interrupt()
+      if (deadline.isDefined) Thread.currentThread().interrupt()
       firstFailure.foreach(e => throw e)
-      if (interrupted && firstFailure.isEmpty)
+      if (deadline.isDefined)
         throw new InterruptedException(
           "GenState.inParallel: caller interrupted while waiting for " +
             "concurrent table writes (all writes were drained before abort)")
     } finally pool.shutdown()
   }
+
+  /** How long [[inParallel]] keeps draining its writes after the caller is
+    * interrupted: long enough for a healthy write to commit, short enough
+    * that a hung one does not hold the caller's abort.
+    */
+  val InterruptGraceMs = 10000L
 
   /** FENCED per-generation table write — the guarded-write primitive of
     * the steal-capable (claimGeneration) families, closing the

@@ -389,6 +389,12 @@ object LabelState {
     *     dir ([[graft.util.TmpDirs.sessionCheckpointDir]] resolution:
     *     `SPARK_GRAFT_CHECKPOINT_DIR`, else the app's own dir, else
     *     scratch) — survives executor loss; the cluster-mode setting.
+    *     Each delete-serve writes one such checkpoint. Its files are
+    *     deleted once the RDD is unreachable only when
+    *     `spark.cleaner.referenceTracking.cleanCheckpoints` is true on
+    *     the SparkContext, which [[graft.GraftSession.create]] sets unless
+    *     the JVM's spark.* properties already do; otherwise they pile up
+    *     in the checkpoint dir for the life of the application.
     *   - `none`: no materialization — the shared subplans recompute per
     *     action (the pre-round-20 behavior; correct, ~2× the splice's
     *     heavy stages).

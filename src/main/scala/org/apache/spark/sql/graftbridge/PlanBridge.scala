@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.QueryExecution
 
 /** Bridge to Spark's `private[sql]` Dataset factory so the engine can wrap
   * a custom LogicalPlan (graft.plans.TopKPerKey) as a DataFrame. Lives in
@@ -22,6 +24,32 @@ object PlanBridge {
     plan.setAnalyzed()
     ofRows(spark, plan)
   }
+
+  /** [[ofAnalyzed]] whose QueryExecution also takes `optimized` as its
+    * optimized plan instead of running the optimizer: physical planning,
+    * codegen and the job read it as they read an optimized plan (both
+    * `assertOptimized` and `sparkPlan` go through `optimizedPlan`). The
+    * caller guarantees that `optimized` is what the optimizer makes of
+    * `analyzed` in this session when nothing is cached
+    * (graft.pipeline.OohPipeline re-binds one optimized plan to each new
+    * scan). If something has been cached by the time the plan is first
+    * needed, it is optimized as usual, so cached data is still read.
+    */
+  def ofPrepared(spark: SparkSession, analyzed: LogicalPlan, optimized: LogicalPlan): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    analyzed.setAnalyzed()
+    optimized.setAnalyzed()
+    val qe = new QueryExecution(session, analyzed, shuffleCleanupMode =
+        QueryExecution.determineShuffleCleanupMode(session.sessionState.conf)) {
+      override lazy val optimizedPlan: LogicalPlan =
+        if (cacheIsEmpty(session)) optimized else super.optimizedPlan
+    }
+    session.withActive(new classic.Dataset[Row](qe, () => RowEncoder.encoderFor(analyzed.schema)))
+  }
+
+  /** Whether the session's cache manager holds no cached plan. */
+  def cacheIsEmpty(spark: SparkSession): Boolean =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
 
   /** Column ↔ Expression bridging (Spark 4's Column wraps a ColumnNode, so
     * direct construction from a Catalyst Expression goes through the

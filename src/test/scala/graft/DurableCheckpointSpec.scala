@@ -89,6 +89,10 @@ class DurableCheckpointSpec extends SparkSpec {
     before.foreach(b => assert(after.get == b))
   }
 
+  test("a GraftSession lets the context cleaner delete durable checkpoint files") {
+    assert(spark.sparkContext.getConf.getOption(GraftSession.CleanCheckpoints).contains("true"))
+  }
+
   test("an unknown spark.graft.splice.checkpoint value is rejected, not read as local") {
     val key = "spark.graft.splice.checkpoint"
     val df = spark.range(3).toDF("node")

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.pipeline.OohPipeline
 
@@ -109,7 +110,7 @@ class OohPipelineSpec extends SparkSpec {
     assert(ds.collect().find(_.title == "Military Careers").get.description.isEmpty)
   }
 
-  // ---- the analyzed template behind occupations ----------------------------
+  // ---- the templates behind occupations and report -------------------------
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.getString(0))
 
@@ -125,45 +126,112 @@ class OohPipelineSpec extends SparkSpec {
     f.toString
   }
 
+  private def read(path: String = OohPipeline.fixturePath): DataFrame =
+    OohPipeline.read(spark, path)
+
+  /** Empties the session's cache, which the prepared path needs, and
+    * builds both templates (a report template needs a prepared input).
+    */
+  private def warm(): Unit = {
+    spark.catalog.clearCache()
+    OohPipeline.occupations(read())
+    OohPipeline.report(OohPipeline.occupations(read()))
+  }
+
+  /** Collects `df`; true when that ran no optimizer, i.e. `df` is prepared. */
+  private def prepared(df: DataFrame): Boolean = {
+    df.collect()
+    !df.queryExecution.tracker.phases.contains("optimization")
+  }
+
   test("template: rows and schema match the definition analyzed directly, on two files") {
+    warm()
     for (path <- Seq(OohPipeline.fixturePath, secondFile)) {
-      val raw = OohPipeline.read(spark, path)
+      val raw = read(path)
       val got = OohPipeline.occupations(raw)
       val want = OohPipeline.definition(raw)
+      assert(prepared(got), path)
       assert(got.schema == want.schema)
+      assert(got.queryExecution.optimizedPlan.sameResult(want.queryExecution.optimizedPlan), path)
       assert(rows(got) == rows(want), path)
       assert(rows(got).length == 8)
+      val rep = OohPipeline.report(got)
+      val wantRep = OohPipeline.reportDefinition(want)
+      assert(prepared(rep), path)
+      assert(rep.schema == wantRep.schema)
+      assert(rep.queryExecution.optimizedPlan.sameResult(wantRep.queryExecution.optimizedPlan), path)
+      assert(rows(rep) == rows(wantRep), path)
+      assert(rows(rep).length == 3)
     }
-    assert(rows(OohPipeline.occupations(OohPipeline.read(spark, secondFile)))
+    assert(rows(OohPipeline.occupations(read(secondFile)))
       .map(_.getString(0)).contains("Data Engineers II"))
   }
 
   test("template: a second call is not analyzed again") {
-    OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath))
+    warm()
     val template = OohPipeline.templates.get(spark)
-    val qe = OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath)).queryExecution
-    assert(qe.analyzed eq qe.logical)
+    for (df <- Seq(OohPipeline.occupations(read()),
+        OohPipeline.report(OohPipeline.occupations(read())))) {
+      val qe = df.queryExecution
+      assert(qe.analyzed eq qe.logical)
+      df.collect()
+      val phases = qe.tracker.phases
+      assert(!phases.contains("optimization"), phases)
+      assert(phases.contains("planning"), phases)
+    }
     assert(OohPipeline.templates.get(spark) eq template, "the template was built again")
   }
 
+  test("template: a cached raw still reads through InMemoryRelation") {
+    warm()
+    val raw = read()
+    // prepared before the cache, run after it
+    val early = OohPipeline.occupations(raw)
+    val earlyReport = OohPipeline.report(OohPipeline.occupations(raw))
+    raw.cache()
+    try {
+      val occ = OohPipeline.occupations(raw)
+      for (df <- Seq(occ, OohPipeline.report(occ), early, earlyReport)) {
+        assert(!prepared(df))
+        assert(df.queryExecution.optimizedPlan.collectFirst { case r: InMemoryRelation => r }
+          .isDefined, df.queryExecution.optimizedPlan)
+      }
+      assert(rows(occ) == rows(OohPipeline.definition(read())))
+      assert(rows(early) == rows(occ))
+    } finally raw.unpersist(blocking = true)
+  }
+
   test("template: two occupations frames self-join on title") {
-    val a = OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath))
-    val b = OohPipeline.occupations(OohPipeline.read(spark, OohPipeline.fixturePath))
+    warm()
+    val a = OohPipeline.occupations(read())
+    val b = OohPipeline.occupations(read())
+    assert(prepared(a) && prepared(b))
     assert(a.join(b, "title").count() == 8)
     assert(a.join(b, a("medianPayAnnual") <=> b("medianPayAnnual") && a("title") === b("title"))
       .count() == 8)
-    val raw = OohPipeline.read(spark, OohPipeline.fixturePath)
-    assert(OohPipeline.occupations(raw).join(OohPipeline.occupations(raw), "title").count() == 8)
+    val raw = read()
+    val (c, d) = (OohPipeline.occupations(raw), OohPipeline.occupations(raw))
+    assert(prepared(c) && prepared(d))
+    assert(c.join(d, "title").count() == 8)
+    val (r1, r2) = (OohPipeline.report(c), OohPipeline.report(d))
+    assert(prepared(r1) && prepared(r2))
+    assert(r1.join(r2, "title").count() == 3)
   }
 
   test("template: a conf flip builds a new template (spark.sql.ansi.enabled)") {
     val key = "spark.sql.ansi.enabled"
     val before = spark.conf.get(key)
     def plans(): (LogicalPlan, LogicalPlan) = {
-      val raw = OohPipeline.read(spark, OohPipeline.fixturePath)
-      (OohPipeline.occupations(raw).queryExecution.analyzed.canonicalized,
-        OohPipeline.definition(raw).queryExecution.analyzed.canonicalized)
+      val raw = read()
+      OohPipeline.occupations(raw)
+      val got = OohPipeline.occupations(raw)
+      val want = OohPipeline.definition(raw)
+      assert(prepared(got))
+      assert(got.queryExecution.optimizedPlan.sameResult(want.queryExecution.optimizedPlan))
+      (got.queryExecution.analyzed.canonicalized, want.queryExecution.analyzed.canonicalized)
     }
+    warm()
+    val record = OohPipeline.templates.get(spark)
     val (asIs, asIsDirect) = plans()
     assert(asIs == asIsDirect)
     spark.conf.set(key, (!before.toBoolean).toString)
@@ -171,16 +239,44 @@ class OohPipelineSpec extends SparkSpec {
       val (flipped, flippedDirect) = plans()
       assert(flipped == flippedDirect)
       assert(flipped != asIs, "the ANSI flip did not change the analyzed plan")
+      assert(!(OohPipeline.templates.get(spark) eq record), "the ANSI flip kept the record")
     } finally spark.conf.set(key, before)
     assert(plans()._1 == asIs)
   }
 
   test("template: a raw frame with another schema still gives correct rows") {
-    val raw = OohPipeline.read(spark, OohPipeline.fixturePath)
+    warm()
+    val raw = read()
     val wider = raw.select((lit(1).as("extra") +: raw.columns.reverse.toSeq.map(raw(_))): _*)
     val got = OohPipeline.occupations(wider)
     assert(rows(got) == rows(OohPipeline.definition(wider)))
     assert(rows(got) == rows(OohPipeline.occupations(raw)))
+  }
+
+  test("template: other inputs take the standard path with correct rows") {
+    warm()
+    val record = OohPipeline.templates.get(spark)
+    val want = rows(OohPipeline.definition(read()))
+    // a projection over the scan: the analyzed template, not the optimized one
+    val raw = read()
+    val projected = OohPipeline.occupations(raw.select(raw.columns.toSeq.map(raw(_)): _*))
+    assert(!prepared(projected))
+    assert(rows(projected) == want)
+    assert(OohPipeline.templates.get(spark) eq record)
+    // an XML read with other options: a record of its own
+    val other = spark.read.format("xml").option("rowTag", "occupation")
+      .option("mode", "PERMISSIVE").schema(OohPipeline.rawSchema).load(OohPipeline.fixturePath)
+    val occ = OohPipeline.occupations(other)
+    assert(!prepared(occ))
+    assert(rows(occ) == want)
+    assert(!(OohPipeline.templates.get(spark) eq record))
+    // a report over anything but the bare prepared projection
+    warm()
+    val filtered = OohPipeline.occupations(read())
+      .filter(col("title") =!= "Data Engineers")
+    val rep = OohPipeline.report(filtered)
+    assert(!prepared(rep))
+    assert(rows(rep).map(_.getString(0)) == Seq("Archivists", "Boundary Testers"))
   }
 
   test("template: stopping a session drops its entry") {
@@ -207,7 +303,14 @@ object OohTemplateStopCheck {
       OohPipeline.occupations(OohPipeline.read(s, OohPipeline.fixturePath)).count()
     val first = GraftSession.create("ooh-template-stop-1", cores = 1)
     occupations(first)
-    require(OohPipeline.templates.containsKey(first), "no template for a live session")
+    OohPipeline.report(OohPipeline.occupations(OohPipeline.read(first, OohPipeline.fixturePath)))
+      .collect()
+    OohPipeline.report(OohPipeline.occupations(OohPipeline.read(first, OohPipeline.fixturePath)))
+      .collect()
+    val record = OohPipeline.templates.get(first)
+    require(record != null, "no template for a live session")
+    require(record.occupations.optimized.isDefined && record.report.optimized.isDefined,
+      "the live session's record holds no optimized plans")
     first.stop()
     val second = GraftSession.create("ooh-template-stop-2", cores = 1)
     try {

@@ -1,6 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,6 +42,32 @@ class ParallelWritesSpec extends AnyFunSuite {
     GenState.inParallel(Seq(() => { ran.incrementAndGet(); () }))
     GenState.inParallel(Seq.empty)
     assert(ran.get() == 1)
+  }
+
+  test("an interrupted caller stops waiting for a hung write after a grace period") {
+    val started = new CountDownLatch(2)
+    val release = new CountDownLatch(1)
+    val outcome = new AtomicReference[Throwable]()
+    // one write ignores interrupts until released: a stalled FS call
+    val hung = () => {
+      started.countDown()
+      var done = false
+      while (!done) try { release.await(); done = true } catch { case _: InterruptedException => }
+    }
+    val caller = new Thread(() =>
+      try GenState.inParallel(Seq(hung, () => started.countDown()))
+      catch { case t: Throwable => outcome.set(t) })
+    caller.start()
+    try {
+      assert(started.await(30, TimeUnit.SECONDS), "the writes did not start")
+      caller.interrupt()
+      caller.join(TimeUnit.SECONDS.toMillis(60))
+      assert(!caller.isAlive, "the interrupted caller is still waiting for the hung write")
+      assert(outcome.get.isInstanceOf[InterruptedException], outcome.get)
+    } finally {
+      release.countDown()
+      caller.join()
+    }
   }
 
   test("spark job-group/description thread-locals reach pool threads") {
