@@ -149,11 +149,12 @@ object HtmlEntities {
   }
 
   /** Index of the ';' ending a reference that starts at `s(amp) == '&'`,
-    * or -1 when no ';' comes before a space, '&', '<' or `maxRef` chars.
+    * or -1 when no ';' comes before a space, '&', '<', `maxRef` chars or
+    * index `end`.
     */
-  private def refEnd(s: String, amp: Int): Int = {
+  private def refEnd(s: String, amp: Int, end: Int): Int = {
     var j = amp + 1
-    val lim = math.min(s.length, amp + 1 + maxRef + 1)
+    val lim = math.min(end, amp + 1 + maxRef + 1)
     while (j < lim) {
       val c = s.charAt(j)
       if (c == ';') return j
@@ -172,7 +173,7 @@ object HtmlEntities {
       val c = s.charAt(i)
       if (c != '&') { sb.append(c); i += 1 }
       else {
-        val semi = refEnd(s, i)
+        val semi = refEnd(s, i, s.length)
         if (semi < 0) { sb.append("&amp;"); i += 1 }
         else if (isXmlNative(s, i + 1, semi) || isNumericRef(s, i + 1, semi)) {
           sb.append(s, i, semi + 1); i = semi + 1
@@ -187,11 +188,12 @@ object HtmlEntities {
 
   /** Appends what the reference at `s(amp) == '&'` reads as once `compute`
     * has run and an XML parser has decoded the result — its character, or
-    * a literal '&' — and returns the index after it. An invalid numeric
-    * code point (zero, a surrogate, above U+10FFFF) reads as U+FFFD.
+    * a literal '&' — and returns the index after it. The reference must
+    * end before index `end`. An invalid numeric code point (zero, a
+    * surrogate, above U+10FFFF) reads as U+FFFD.
     */
-  private[graft] def decode(s: String, amp: Int, sb: java.lang.StringBuilder): Int = {
-    val semi = refEnd(s, amp)
+  private[graft] def decode(s: String, amp: Int, end: Int, sb: java.lang.StringBuilder): Int = {
+    val semi = refEnd(s, amp, end)
     val cp = if (semi < 0) -1 else codePoint(s, amp + 1, semi)
     if (cp < 0) { sb.append('&'); amp + 1 }
     else { sb.appendCodePoint(cp); semi + 1 }

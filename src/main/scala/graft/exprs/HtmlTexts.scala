@@ -191,6 +191,10 @@ object HtmlTexts {
   private final val Cell = 32 // td, th
   private final val Section = 64 // thead, tbody, tfoot
   private final val Table = 128
+  /** The number of class bits an implied close looks for, as targets or as
+    * scopes: every bit above but `Void`.
+    */
+  private final val Classes = 8
   private final val Void = 256
   /** Containers an implied close never reaches past. An open `<p>` needs
     * none: every container start tag closes it first.
@@ -260,13 +264,20 @@ object HtmlTexts {
     new GenericArrayData(r.out.toArray)
   }
 
-  /** One pass over one fragment. Stack slot 0 is the fragment itself. */
+  /** One pass over one fragment, in time linear in its length. Stack slot 0
+    * is the fragment itself.
+    */
   private final class Reader(s: String, path: HtmlPath) {
     val out = ArrayBuffer.empty[Any]
     private val n = s.length
-    private var names = new Array[String](16)
-    /** The [[tagClass]] flags of each open element. */
-    private var flags = new Array[Int](16)
+    /** Per tag name, how many elements of that name are open. */
+    private val openNamed = new java.util.HashMap[String, Array[Int]]
+    /** The [[openNamed]] count of each open element's name. */
+    private var named = new Array[Array[Int]](16)
+    /** `near(d * Classes + b)`: the depth of the nearest element at or
+      * below depth `d` whose [[tagClass]] flags hold bit `b`, 0 if none.
+      */
+    private var near = new Array[Int](16 * Classes)
     private var here = new Array[Long](16)
     private var upto = new Array[Long](16)
     private var depth = 0
@@ -288,7 +299,7 @@ object HtmlTexts {
           i = if (lt < 0) n else markup(lt)
         } else s.charAt(i) match {
           case '<' => i = markup(i)
-          case '&' => i = HtmlEntities.decode(s, i, text)
+          case '&' => i = HtmlEntities.decode(s, i, n, text)
           case '\r' =>
             text.append('\n')
             i = if (i + 1 < n && s.charAt(i + 1) == '\n') i + 2 else i + 1
@@ -311,16 +322,24 @@ object HtmlTexts {
 
     private def push(name: String, f: Int): Unit = {
       flush()
-      if (depth + 1 == names.length) {
-        names = java.util.Arrays.copyOf(names, names.length * 2)
-        flags = java.util.Arrays.copyOf(flags, names.length)
-        here = java.util.Arrays.copyOf(here, names.length)
-        upto = java.util.Arrays.copyOf(upto, names.length)
+      if (depth + 1 == named.length) {
+        named = java.util.Arrays.copyOf(named, named.length * 2)
+        near = java.util.Arrays.copyOf(near, named.length * Classes)
+        here = java.util.Arrays.copyOf(here, named.length)
+        upto = java.util.Arrays.copyOf(upto, named.length)
       }
       val h = path.enter(name, attrs, here(depth), upto(depth))
+      var count = openNamed.get(name)
+      if (count == null) { count = new Array[Int](1); openNamed.put(name, count) }
+      count(0) += 1
       depth += 1
-      names(depth) = name
-      flags(depth) = f
+      named(depth) = count
+      System.arraycopy(near, (depth - 1) * Classes, near, depth * Classes, Classes)
+      var b = f // a pushed tag is never Void, so its bits are all below Classes
+      while (b != 0) {
+        near(depth * Classes + Integer.numberOfTrailingZeros(b)) = depth
+        b &= b - 1
+      }
       here(depth) = h
       upto(depth) = upto(depth - 1) | h
       selecting = path.selectsText(h, upto(depth))
@@ -328,21 +347,27 @@ object HtmlTexts {
 
     private def popTo(d: Int): Unit = {
       flush()
-      depth = d
+      while (depth > d) { named(depth)(0) -= 1; depth -= 1 }
       selecting = path.selectsText(here(d), upto(d))
     }
 
     /** Close the nearest open element of a class in `targets`, unless an
-      * element of a class in `scope` comes first.
+      * element of a class in `scope` comes first (no element is in both).
       */
     private def closeOpen(targets: Int, scope: Int): Unit = {
-      var d = depth
-      while (d > 0) {
-        val f = flags(d)
-        if ((f & targets) != 0) { popTo(d - 1); return }
-        if ((f & scope) != 0) return
-        d -= 1
+      val t = nearest(targets)
+      if (t > nearest(scope)) popTo(t - 1)
+    }
+
+    /** The depth of the nearest open element of a class in `classes`. */
+    private def nearest(classes: Int): Int = {
+      var d = 0
+      var b = classes
+      while (b != 0) {
+        d = math.max(d, near(depth * Classes + Integer.numberOfTrailingZeros(b)))
+        b &= b - 1
       }
+      d
     }
 
     /** The markup starting at `s(lt) == '<'`; returns the index after it. */
@@ -390,9 +415,12 @@ object HtmlTexts {
       val name = lower(from, nameEnd)
       val end = attributes(nameEnd, keep = false)
       if (end < 0) return n
-      var d = depth
-      while (d > 0 && names(d) != name) d -= 1
-      if (d > 0) popTo(d - 1)
+      val count = openNamed.get(name)
+      if (count != null && count(0) > 0) {
+        var d = depth
+        while (named(d) ne count) d -= 1
+        popTo(d - 1)
+      }
       end
     }
 
@@ -443,7 +471,7 @@ object HtmlTexts {
       while (i < to) {
         val c = s.charAt(i)
         // the reference must end inside the value
-        if (c == '&') i = HtmlEntities.decode(s.substring(0, to), i, sb)
+        if (c == '&') i = HtmlEntities.decode(s, i, to, sb)
         else {
           sb.append(if (c == '\t' || c == '\n' || c == '\r') ' ' else c)
           i += (if (c == '\r' && i + 1 < to && s.charAt(i + 1) == '\n') 2 else 1)

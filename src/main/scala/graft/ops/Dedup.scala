@@ -581,7 +581,7 @@ object Dedup {
     * buckets instead of 256: measured at sf0.1 this emits 0.78M candidate
     * rows instead of 2.8M, and the hottest bucket shrinks 4.6× (skew is the
     * wall-clock killer — one hot 8-bit bucket serializes a whole SMJ group
-    * into a single task). Probe-side fan-out is a fixed 17×, independent of
+    * into a single task). The probe side's fan-out is a fixed 17×, independent of
     * corpus size. Candidates are then verified by exact bit_count(xor).
     */
   def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {

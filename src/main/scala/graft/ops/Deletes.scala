@@ -16,29 +16,58 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Deletes {
 
-  /** modality name → (expected id column, delete entry point) */
-  val modalities: Map[String, (String, (SparkSession, String, DataFrame) => Int)] = Map(
-    "exact" -> (("doc_id", (s, d, ids) => IncrementalExact.delete(s, d, ids))),
-    "cluster" -> (("doc_id", IncrementalDedup.delete _)),
-    "minhash" -> (("doc_id", IncrementalMinHash.delete _)),
-    "substring" -> (("doc_id", IncrementalSubstring.delete _)),
-    "embedding" -> (("vec_id", IncrementalEmbedding.delete _)),
-    "semantic" -> (("vec_id", IncrementalSemantic.delete _)),
-    "ivf" -> (("vec_id", IncrementalIvf.delete _)),
-    "ivfpq" -> (("vec_id", IncrementalIvfPq.delete _)),
-    "media" -> (("name", IncrementalMedia.delete _)),
-    // the audio modality rides the codec-parametric media chassis: the
-    // delete/compact path is codec-agnostic, so the alias is the contract
-    "audio" -> (("name", IncrementalMedia.delete _)),
-    "video" -> (("name", IncrementalMedia.delete _)),
-    "png" -> (("name", IncrementalMedia.delete _)),
-    "jpeg" -> (("name", IncrementalMedia.delete _)),
-    "tiff" -> (("name", IncrementalMedia.delete _)),
-    "rotmedia" -> (("name", IncrementalRotMedia.delete _)),
-    "dsir" -> (("doc_id", IncrementalDsir.delete _)),
-    "classifier" -> (("doc_id", IncrementalClassifier.delete _)),
-    "card" -> (("doc_id", IncrementalCard.delete _)),
-    "topk" -> (("doc_id", IncrementalTopK.delete _)))
+  /** One modality's entry in the registry: the id column its state stores,
+    * the family's commit table (what [[GenState]] keys generation liveness
+    * and sweeps on — [[purge]]'s forced final sweep needs it), and its
+    * delete and compact (the physical purge) entry points.
+    */
+  final case class Modality(
+      idColumn: String,
+      commitTable: String,
+      delete: (SparkSession, String, DataFrame) => Int,
+      compact: (SparkSession, String) => Int)
+
+  /** modality name → [[Modality]], one entry per tombstone modality. */
+  val modalities: Map[String, Modality] = {
+    // the image, audio and video modalities ride the codec-parametric media
+    // chassis: the delete/compact path is codec-agnostic, so the alias is
+    // the contract
+    val media = Modality("name", IncrementalMedia.commitTable,
+      IncrementalMedia.delete, IncrementalMedia.compact)
+    Map(
+      "exact" -> Modality("doc_id", IncrementalExact.commitTable,
+        IncrementalExact.delete(_, _, _), IncrementalExact.compact),
+      "cluster" -> Modality("doc_id", IncrementalDedup.commitTable,
+        IncrementalDedup.delete, IncrementalDedup.compact),
+      "minhash" -> Modality("doc_id", IncrementalMinHash.commitTable,
+        IncrementalMinHash.delete, IncrementalMinHash.compact),
+      "substring" -> Modality("doc_id", IncrementalSubstring.commitTable,
+        IncrementalSubstring.delete, IncrementalSubstring.compact),
+      "embedding" -> Modality("vec_id", IncrementalEmbedding.commitTable,
+        IncrementalEmbedding.delete, IncrementalEmbedding.compact),
+      "semantic" -> Modality("vec_id", IncrementalSemantic.commitTable,
+        IncrementalSemantic.delete, IncrementalSemantic.compact),
+      "ivf" -> Modality("vec_id", IncrementalIvf.commitTable,
+        IncrementalIvf.delete, IncrementalIvf.compact),
+      "ivfpq" -> Modality("vec_id", IncrementalIvfPq.commitTable,
+        IncrementalIvfPq.delete, IncrementalIvfPq.compact),
+      "media" -> media,
+      "audio" -> media,
+      "video" -> media,
+      "png" -> media,
+      "jpeg" -> media,
+      "tiff" -> media,
+      "rotmedia" -> Modality("name", IncrementalRotMedia.commitTable,
+        IncrementalRotMedia.delete, IncrementalRotMedia.compact),
+      "dsir" -> Modality("doc_id", IncrementalDsir.commitTable,
+        IncrementalDsir.delete, IncrementalDsir.compact),
+      "classifier" -> Modality("doc_id", IncrementalClassifier.commitTable,
+        IncrementalClassifier.delete, IncrementalClassifier.compact),
+      "card" -> Modality("doc_id", IncrementalCard.commitTable,
+        IncrementalCard.delete, IncrementalCard.compact),
+      "topk" -> Modality("doc_id", IncrementalTopK.commitTable,
+        IncrementalTopK.delete, IncrementalTopK.compact))
+  }
 
   /** Tombstone `ids` in the state dir of one `modality`. Returns the new
     * tombstone generation. Unknown modalities fail fast with the known
@@ -46,14 +75,14 @@ object Deletes {
     */
   def tombstone(spark: SparkSession, stateDir: String, modality: String,
       ids: DataFrame): Int = {
-    val (idCol, fn) = modalities.getOrElse(modality,
+    val m = modalities.getOrElse(modality,
       throw new IllegalArgumentException(
         s"Deletes.tombstone: unknown modality '$modality' — known: " +
           modalities.keys.toSeq.sorted.mkString(", ")))
     require(ids.columns.length == 1,
       s"Deletes.tombstone: ids must be a single-column frame, got " +
         s"(${ids.columns.mkString(", ")})")
-    fn(spark, stateDir, ids.toDF(idCol))
+    m.delete(spark, stateDir, ids.toDF(m.idColumn))
   }
 
   /** The GDPR sweep: tombstone the same ids across every (stateDir,
@@ -67,53 +96,6 @@ object Deletes {
     stores.map { case (stateDir, modality) =>
       (stateDir, modality, tombstone(spark, stateDir, modality, ids))
     }
-
-  /** modality name → compact entry point (the physical purge). */
-  val compacts: Map[String, (SparkSession, String) => Int] = Map(
-    "exact" -> (IncrementalExact.compact _),
-    "cluster" -> (IncrementalDedup.compact _),
-    "minhash" -> (IncrementalMinHash.compact _),
-    "substring" -> (IncrementalSubstring.compact _),
-    "embedding" -> (IncrementalEmbedding.compact _),
-    "semantic" -> (IncrementalSemantic.compact _),
-    "ivf" -> (IncrementalIvf.compact _),
-    "ivfpq" -> (IncrementalIvfPq.compact _),
-    "media" -> (IncrementalMedia.compact _),
-    "audio" -> (IncrementalMedia.compact _),
-    "video" -> (IncrementalMedia.compact _),
-    "png" -> (IncrementalMedia.compact _),
-    "jpeg" -> (IncrementalMedia.compact _),
-    "tiff" -> (IncrementalMedia.compact _),
-    "rotmedia" -> (IncrementalRotMedia.compact _),
-    "dsir" -> (IncrementalDsir.compact _),
-    "classifier" -> (IncrementalClassifier.compact _),
-    "card" -> (IncrementalCard.compact _),
-    "topk" -> (IncrementalTopK.compact _))
-
-  /** modality name → the family's commit table (what [[GenState]] keys
-    * generation liveness and sweeps on) — needed by [[purge]]'s forced
-    * final sweep.
-    */
-  val commitTables: Map[String, String] = Map(
-    "exact" -> IncrementalExact.commitTable,
-    "cluster" -> IncrementalDedup.commitTable,
-    "minhash" -> IncrementalMinHash.commitTable,
-    "substring" -> IncrementalSubstring.commitTable,
-    "embedding" -> IncrementalEmbedding.commitTable,
-    "semantic" -> IncrementalSemantic.commitTable,
-    "ivf" -> IncrementalIvf.commitTable,
-    "ivfpq" -> IncrementalIvfPq.commitTable,
-    "media" -> IncrementalMedia.commitTable,
-    "audio" -> IncrementalMedia.commitTable,
-    "video" -> IncrementalMedia.commitTable,
-    "png" -> IncrementalMedia.commitTable,
-    "jpeg" -> IncrementalMedia.commitTable,
-    "tiff" -> IncrementalMedia.commitTable,
-    "rotmedia" -> IncrementalRotMedia.commitTable,
-    "dsir" -> IncrementalDsir.commitTable,
-    "classifier" -> IncrementalClassifier.commitTable,
-    "card" -> IncrementalCard.commitTable,
-    "topk" -> IncrementalTopK.commitTable)
 
   /** Tombstone AND physically erase: a tombstone alone only shadows —
     * the deleted bytes leave disk when the modality's compact applies
@@ -141,9 +123,9 @@ object Deletes {
   def purge(spark: SparkSession, stateDir: String, modality: String,
       ids: DataFrame): Int = {
     tombstone(spark, stateDir, modality, ids)
-    val ct = commitTables(modality)
-    val gen = compacts(modality)(spark, stateDir)
-    purgeErase(spark, stateDir, ct, gen)
+    val m = modalities(modality)
+    val gen = m.compact(spark, stateDir)
+    purgeErase(spark, stateDir, m.commitTable, gen)
     gen
   }
 

@@ -46,14 +46,14 @@ object IncrementalDedup {
 
   /** The commit table GenState keys generation liveness on — the value
     * [[GenState]]'s defaults assume; exposed so cross-family consumers
-    * ([[Deletes.commitTables]]) can never silently diverge.
+    * ([[Deletes.modalities]]) can never silently diverge.
     */
   private[ops] val commitTable = "labels"
 
   // ---- 32-bit saturation guard ---------------------------------------------
   //
-  // The width=32 regime has a MEASURED cliff (tools/TextScaleProbe,
-  // SCALE.md round 18): hamming≤3-of-32 admits ~1.3e-6 of RANDOM pairs, so
+  // The width=32 regime has a MEASURED cliff (SCALE.md,
+  // "The text state decade", round 18): hamming≤3-of-32 admits ~1.3e-6 of RANDOM pairs, so
   // past ~10^5 heterogeneous docs the incidental pair graph percolates and
   // the incremental label splice degrades super-linearly — measured 21×
   // split-ingest blowup across the 100k→1M decade, with the 16-bit band
@@ -114,7 +114,7 @@ object IncrementalDedup {
         f"IncrementalDedup: the 32-bit half-band index at $stateDir has " +
           f"estimated mean bucket occupancy $occupancy%.1f (>= $threshold%.1f) — " +
           "the width=32 regime is SATURATING. Measured consequence " +
-          "(tools/TextScaleProbe, SCALE.md): hamming<=3-of-32 admits ~1.3e-6 " +
+          "(SCALE.md, the text state decade): hamming<=3-of-32 admits ~1.3e-6 " +
           "of random pairs, the incidental pair graph percolates, and " +
           "split-ingest cost blew up 21x across the 100k->1M decade while " +
           "width=64 stayed flat (1.1-1.7x per 10x data). Migration: the " +
@@ -286,7 +286,7 @@ object IncrementalDedup {
     * `batchKey`, cross pairs and the label-fold split repaired at read
     * ([[stateLabels]]) and made durable at [[compact]].
     *
-    * WIDTH REGIME GUIDANCE (measured, `tools/TextScaleProbe`, SCALE.md
+    * WIDTH REGIME GUIDANCE (measured, SCALE.md "The text state decade",
     * round 18): the 32-bit default is right up to ~10^5 docs of
     * heterogeneous text; past that, hamming≤3-of-32 admits ~1.3e-6 of
     * RANDOM pairs — at 10^6 docs the incidental pair graph percolates

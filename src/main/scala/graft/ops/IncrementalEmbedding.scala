@@ -36,7 +36,7 @@ object IncrementalEmbedding {
 
   /** The commit table GenState keys generation liveness on — the value
     * [[GenState]]'s defaults assume; exposed so cross-family consumers
-    * ([[Deletes.commitTables]]) can never silently diverge.
+    * ([[Deletes.modalities]]) can never silently diverge.
     */
   private[ops] val commitTable = "labels"
 
@@ -116,7 +116,7 @@ object IncrementalEmbedding {
     // cap forfeits recall in buckets holding > cap vectors — at fixed
     // planes=8 (256 buckets) a corpus outgrows the geometry at ~cap×256
     // spread vectors. Size planes ≈ log2(n / targetOccupancy); see
-    // tools/EmbeddingScaleProbe and SCALE.md for the measured decades.
+    // SCALE.md for the measured decades.
     GenState.checkConfig(spark, stateDir,
       Map("threshold" -> threshold.toString, "cap" -> cap.toString) ++
         (if (planes != graft.exprs.SrpBucket.numPlanes)

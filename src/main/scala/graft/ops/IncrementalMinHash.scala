@@ -63,7 +63,7 @@ object IncrementalMinHash {
 
   /** The commit table GenState keys generation liveness on — the value
     * [[GenState]]'s defaults assume; exposed so cross-family consumers
-    * ([[Deletes.commitTables]]) can never silently diverge.
+    * ([[Deletes.modalities]]) can never silently diverge.
     */
   private[ops] val commitTable = "labels"
 

@@ -270,14 +270,8 @@ object IncrementalSubstring {
     // anchor the batch once; the generation dir is the materialized copy
     // both probe sides read (anchors land before hits — a crash leaves an
     // uncommitted generation the next merge overwrites)
-    def t[A](l: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (sys.env.contains("GRAFT_SUBSTR_TRACE"))
-        println(f"TRACE merge/$l: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    t("anchors")(GenState.fencedParquet(spark, stateDir, next, "anchors",
-      claim, commitTable)(anchorsOf(newDocs)))
+    GenState.fencedParquet(spark, stateDir, next, "anchors",
+      claim, commitTable)(anchorsOf(newDocs))
     val newAnch = spark.read.parquet(anchorsPath(spark, stateDir, next, Some(claim)))
 
     // Two independent slim writes, run CONCURRENTLY (guide §2.6 via
@@ -296,20 +290,20 @@ object IncrementalSubstring {
     //     mergeOccOf over the full positional union — [[mergeOccOf]]'s
     //     disjoint-doc_id argument — so the cold filter below never
     //     re-aggregates old positional rows.
-    t("docs+occ")(GenState.inParallel(Seq(
+    GenState.inParallel(Seq(
       () => GenState.fencedParquet(spark, stateDir, next, "docs",
         claim, commitTable)(
         newDocs.select(col("doc_id")).dropDuplicates("doc_id")),
       () => GenState.fencedParquet(spark, stateDir, next, "occ",
-        claim, commitTable)(mergeOccOf(newAnch)))))
+        claim, commitTable)(mergeOccOf(newAnch))))
 
     val hot = foldedOcc(spark, stateDir, live :+ next, Some(claim))
       .where(col("aocc") > Dedup.anchorMaxOcc).select(col("anchor"))
     val oldAnch =
       if (live.isEmpty) newAnch.limit(0)
       else spark.read.parquet(live.map(anchorsPath(spark, stateDir, _)): _*)
-    t("hits")(GenState.fencedParquet(spark, stateDir, next, "hits",
-      claim, commitTable)(candidateHits(newAnch, oldAnch, hot)))
+    GenState.fencedParquet(spark, stateDir, next, "hits",
+      claim, commitTable)(candidateHits(newAnch, oldAnch, hot))
     next
   }
 

@@ -29,7 +29,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * memory. The reduce-side pass holds keys-in-partition × k rows, the
   * standard hash-operator footprint.
   *
-  * Measured (tools/TopKBench, local[8], 20M rows, k=5, warm, with the
+  * Measured (a one-off head-to-head, local[8], 20M rows, k=5, warm, with the
   * rewrite rule excluded from the window branch so WindowExec really
   * runs): 1k keys — heap 0.46–0.68 s (rank-emitting mode 0.39–0.44 s —
   * the per-key k·log k sort is cheaper than the extra project the

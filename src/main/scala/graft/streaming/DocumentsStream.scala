@@ -36,9 +36,7 @@ object DocumentsStream {
     * to `mergeBatch` — the shared chassis of the per-modality streaming
     * dedup runners below.
     */
-  // private[graft]: tools/DeleteScaleProbe phase-times the q78 chassis
-  // (ingest drain vs delete drain vs serve) through this seam
-  private[graft] def drainMerges(spark: SparkSession, dir: String, files: Int,
+  private def drainMerges(spark: SparkSession, dir: String, files: Int,
       tag: String, table: (SparkSession, String) => DataFrame = Tables.documents)
       (mergeBatch: (DataFrame, String) => Unit): Unit = {
     val ss = EventsStream.streamSession(spark)

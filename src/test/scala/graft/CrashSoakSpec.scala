@@ -98,7 +98,7 @@ class CrashSoakSpec extends SparkSpec {
     val variants = media.where(col("name").contains("_"))
     val victims = { import spark.implicits._
       Seq("imga.png").toDF("name") }
-    val ct = Deletes.commitTables("png")
+    val ct = Deletes.modalities("png").commitTable
     Family("media", ct,
       Seq(
         "merge-originals" -> (s => { IncrementalMedia.merge(spark, s, originals, codec = "png-dhash"); () }),

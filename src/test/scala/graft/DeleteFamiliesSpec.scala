@@ -359,9 +359,17 @@ class DeleteFamiliesSpec extends SparkSpec {
       Deletes.tombstone(spark, exactState, "exact",
         docs.select(col("doc_id"), col("source")))
     }
-    // every modality has a compact dispatcher (the purge half)
-    assert(Deletes.compacts.keySet == Deletes.modalities.keySet,
-      "purge dispatch must cover exactly the tombstone modalities")
+    // each registry entry names its family's commit table: purge's forced
+    // final sweep keys generation liveness on it, so a wrong table would
+    // erase (or keep) the wrong generations without any error
+    val familyCommitTables = Map(
+      "exact" -> "hashes", "cluster" -> "labels", "minhash" -> "labels",
+      "substring" -> "hits", "embedding" -> "labels", "semantic" -> "labels",
+      "ivf" -> "postings", "ivfpq" -> "codes", "media" -> "pairs",
+      "audio" -> "pairs", "video" -> "pairs", "png" -> "pairs", "jpeg" -> "pairs",
+      "tiff" -> "pairs", "rotmedia" -> "pairs", "dsir" -> "counts",
+      "classifier" -> "counts", "card" -> "partials", "topk" -> "counts")
+    assert(Deletes.modalities.map { case (k, m) => k -> m.commitTable } == familyCommitTables)
   }
 
   test("Deletes.purgeSweep: one loop tombstones AND erases across co-located stores") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.exprs.OohExtractors
+import graft.exprs.{HtmlPath, HtmlTexts, OohExtractors}
 import graft.pipeline.OohPipeline
 
 /** Property-fuzz of the jsdom-grade HTML leniency (reference index.js:3-5).
@@ -101,6 +101,15 @@ class HtmlFuzzSpec extends SparkSpec {
       fragment.pureApply(params, Seed(42L + i), retries = 100))
   }
 
+  private lazy val dbf = DocumentBuilderFactory.newInstance()
+
+  /** Why `xml` does not parse as XML, or None when it does. */
+  private def parseError(xml: String): Option[String] =
+    try {
+      dbf.newDocumentBuilder().parse(new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
+      None
+    } catch { case e: Exception => Some(s"${e.getMessage}\n  in: $xml") }
+
   test(s"htmlAsXml: $nFragments fuzzed tag-soup fragments all parse as XML") {
     import spark.implicits._
     val out = samples.toDF("html")
@@ -110,15 +119,7 @@ class HtmlFuzzSpec extends SparkSpec {
         size(xpath(HtmlOracle.htmlAsXml(col("html")), lit("//p"))).as("np"))
       .collect()
     assert(out.length == nFragments)
-    val dbf = DocumentBuilderFactory.newInstance()
-    val failures = out.flatMap { r =>
-      val xml = r.getString(0)
-      try {
-        dbf.newDocumentBuilder().parse(
-          new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
-        None
-      } catch { case e: Exception => Some(s"${e.getMessage}\n  in: $xml") }
-    }
+    val failures = out.flatMap(r => parseError(r.getString(0)))
     assert(failures.isEmpty,
       s"${failures.length}/$nFragments fragments unparseable; first:\n" +
         failures.headOption.getOrElse(""))
@@ -198,15 +199,7 @@ class HtmlFuzzSpec extends SparkSpec {
       .select(HtmlOracle.htmlAsXml(col("html")).as("xml"),
         size(xpath(HtmlOracle.htmlAsXml(col("html")), lit("//td"))).as("nc"))
       .collect()
-    val dbf = DocumentBuilderFactory.newInstance()
-    val failures = out.flatMap { r =>
-      val xml = r.getString(0)
-      try {
-        dbf.newDocumentBuilder().parse(
-          new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
-        None
-      } catch { case e: Exception => Some(s"${e.getMessage}\n  in: $xml") }
-    }
+    val failures = out.flatMap(r => parseError(r.getString(0)))
     assert(failures.isEmpty,
       s"$tag: ${failures.length}/${frags.length} fragments unparseable; first:\n" +
         failures.headOption.getOrElse(""))
@@ -345,5 +338,101 @@ class HtmlFuzzSpec extends SparkSpec {
       raw.select(col(c)).collect().toSeq.map(_.getString(0)).filter(_ != null))
     assert(frags.length == 8 * sections.length, frags.length.toString)
     assertSameAsOracle(frags, "fixture")
+  }
+
+  // ---- hostile input: no throw, linear time, the oracle where it parses ----
+
+  /** How much longer `html_texts` may take on the 8n input than on the n
+    * input. Linear work reads 8; a walk of the open-element stack per tag
+    * reads 64 on deep nesting.
+    */
+  private val maxGrowth = 16.0
+
+  /** The time `html_texts` takes on `gen(8 * n)` over the time it takes on
+    * `gen(n)`, both timed in this process, best of 5. The n input is timed
+    * over 8 calls and divided, so both timings cover as many bytes. A
+    * reading over [[maxGrowth]] is taken again, up to three readings in
+    * all: a pause on a busy host can spoil one, while a quadratic walk
+    * reads over the bound every time.
+    */
+  private def growth(gen: Int => String, n: Int, path: HtmlPath): Double = {
+    val (small, big) = (gen(n), gen(8 * n))
+    def perCall(html: String, reps: Int): Double = (1 to 5).map { _ =>
+      val t0 = System.nanoTime()
+      for (_ <- 1 to reps) HtmlTexts.select(html, path)
+      (System.nanoTime() - t0).toDouble / reps
+    }.min
+    def reading(): Double = perCall(big, 1) / perCall(small, 8)
+    reading() // warm-up
+    var (best, readings) = (reading(), 1)
+    while (best > maxGrowth && readings < 3) { best = math.min(best, reading()); readings += 1 }
+    best
+  }
+
+  /** The pipeline's commonest path and a predicate path, which also decodes
+    * every attribute value.
+    */
+  private val timedPaths =
+    Seq("//p/text()", "//p[@class='x']/text()").map(HtmlPath.compile(_).toOption.get)
+
+  private def assertLinear(inputs: Seq[(String, Int => String, Int)]): Unit = {
+    val slow = for {
+      (label, gen, n) <- inputs
+      path <- timedPaths
+      g = growth(gen, n, path)
+      if g > maxGrowth
+    } yield f"$label under ${if (path.hasPredicates) "a predicate path" else "//p/text()"}: 8n/n $g%.1f"
+    assert(slow.isEmpty, s"html_texts time grows faster than linear:\n${slow.mkString("\n")}")
+  }
+
+  test("html_texts stays linear on deep nesting and on end tags with nothing to close") {
+    assertLinear(Seq(
+      ("<div>*k", k => "<div>" * k, 5000),
+      ("<span>*k <li>a</li>*k", k => "<span>" * k + "<li>a</li>" * k, 5000),
+      ("<div>*k </b>*k", k => "<div>" * k + "</b>" * k, 5000),
+      ("<span>*k <td>a</td>*k", k => "<span>" * k + "<td>a</td>" * k, 5000),
+      ("<ul><li>*k", k => "<ul><li>" * k, 5000),
+      ("<table><tr><td>*k", k => "<table><tr><td>" * k, 5000)))
+  }
+
+  /** Hostile fragments of size k, one family each. */
+  private val hostile: Seq[(String, Int => String, Int)] = Seq(
+    // 8n = 10^5 open elements
+    ("nesting 10^5 deep", k => "<div>" * k + "<p class=\"x\">a</p>", 12500),
+    ("inline nesting 10^5 deep", k => "<b>" * k + "<p>a" + "</b>" * k, 12500),
+    ("unterminated <!--", k => "<p>a</p>" * k + "<!--" + "<p>b</p>" * k, 4096),
+    ("unterminated <![CDATA[", k => "<p>a</p>" * k + "<![CDATA[" + "<p>b</p>" * k, 4096),
+    ("unterminated tag", k => "<p>a</p>" * k + "<p class=\"x\"" + " y" * k, 4096),
+    ("unterminated attribute quote", k => "<p>a</p>" * k + "<p class=\"x" + "<p>b</p>" * k, 4096),
+    ("flood of <", k => "<p class=\"x\">" + "<" * k, 16384),
+    ("flood of &", k => "<p class=\"x\">" + "&" * k, 16384),
+    ("flood of &amp", k => "<p class=\"x\">" + "&amp" * k, 4096),
+    ("flood of & in an attribute", k => "<p class=\"" + "&" * k + "\">a</p>", 16384),
+    ("flood of &amp in an attribute", k => "<p class=\"" + "&amp" * k + "\">a</p>", 4096),
+    // 8n = 1 MB values
+    ("quoted attribute value of 1 MB", k => "<p class=\"" + "x" * k + "\">a</p><p class=\"x\">b</p>", 131072),
+    ("unquoted attribute value of 1 MB", k => "<p class=" + "x" * k + ">a</p><p class=x>b</p>", 131072),
+    ("lone surrogates in text", k => "<p class=\"x\">" + "\uD800a\uDC00b" * k + "</p>", 16384),
+    ("lone surrogates in an attribute", k => "<p class=\"" + "\uDFFF" * k + "\">a</p>", 16384),
+    ("lone surrogates in tag names", k => "<p\uD800>a</p\uD800>" * k, 4096))
+
+  test("html_texts reads hostile input in linear time without throwing") {
+    assertLinear(hostile)
+  }
+
+  test("html_texts equals the xpath oracle on small hostile input wherever the healed text parses") {
+    import spark.implicits._
+    val closedNesting: Seq[Int => String] = Seq(
+      k => "<div>" * k + "<p>a</p>" + "</div>" * k,
+      k => "<ul><li>" * k + "a" + "</li></ul>" * k,
+      k => "<table><tr><td>" * k + "a" + "</td></tr></table>" * k)
+    val frags = (hostile.map(_._2) ++ closedNesting).flatMap(gen => Seq(1, 2, 5).map(gen))
+    val healed = frags.toDF("html").select(HtmlOracle.htmlAsXml(col("html"))).collect()
+    val parsed = frags.zip(healed).collect { case (f, r) if parseError(r.getString(0)).isEmpty => f }
+    // what heals: the floods of & and &amp (in text and in attributes), the
+    // quoted attribute value, the lone surrogates outside tag names and the
+    // closed nesting, 10 families at 3 sizes each
+    assert(parsed.length == 30, s"${parsed.length} of ${frags.length} parse")
+    assertSameAsOracle(parsed, "hostile")
   }
 }

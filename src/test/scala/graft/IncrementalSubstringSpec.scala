@@ -139,10 +139,10 @@ class IncrementalSubstringSpec extends SparkSpec {
   }
 
   test("merge probe plan is ZERO-SHUFFLE: hot-set and new-batch sides broadcast") {
-    // pins what tools/SubstringPlanProbe prints: the candidate-hits job
-    // must resolve to broadcast joins with no positional-row shuffle —
-    // a Spark upgrade or AQE threshold change that silently reintroduces
-    // an Exchange over the corpus-wide anchor union fails here
+    // the candidate-hits job must resolve to broadcast joins with no
+    // positional-row shuffle — a Spark upgrade or AQE threshold change that
+    // silently reintroduces an Exchange over the corpus-wide anchor union
+    // fails here
     val state = graft.util.TmpDirs.scratch("graft_d20_noshuf_").toString
     IncrementalSubstring.merge(spark, state, docs.where(pmod(col("doc_id"), lit(5)) =!= 0))
     val scratch2 = graft.util.TmpDirs.scratch("graft_d20_noshuf_b2_").toString

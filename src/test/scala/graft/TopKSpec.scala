@@ -80,9 +80,15 @@ class TopKSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val w = Window.partitionBy("key").orderBy(col("v").desc, col("id"))
     spark.conf.set(graft.plans.RewriteWindowTopK.enabledKey, "false")
     val want =
-      try df.withColumn("rn", row_number().over(w)).where(col("rn") <= 4)
-        .drop("rn").orderBy("key", "id").collect().toSeq
-      finally spark.conf.unset(graft.plans.RewriteWindowTopK.enabledKey)
+      try {
+        val ref = df.withColumn("rn", row_number().over(w)).where(col("rn") <= 4).drop("rn")
+        val refPlan = ref.queryExecution.executedPlan
+        assert(collectFirst(refPlan) {
+          case we: org.apache.spark.sql.execution.window.WindowExec => we }.isDefined &&
+          collectFirst(refPlan) { case f: FinalTopKPerKeyExec => f }.isEmpty,
+          s"disabling the rewrite must leave WindowExec in place:\n$refPlan")
+        ref.orderBy("key", "id").collect().toSeq
+      } finally spark.conf.unset(graft.plans.RewriteWindowTopK.enabledKey)
     assert(q.orderBy("key", "id").collect().toSeq == want)
   }
 
