@@ -504,27 +504,14 @@ object Corpus {
         round(col("n_shared").cast("double") / col("n_own"), 6).as("ratio"))
   }
 
-  /** Fold every live registry generation into one ([[GenState]]'s
-    * compaction protocol); the folded set is the same distinct union the
-    * screen reads, so screening is invariant across compactions.
+  /** Fold every live registry generation into one ([[GenState.fold]]);
+    * the folded set is the same distinct union the screen reads, so
+    * screening is invariant across compactions.
     */
   def compactRegistry(spark: SparkSession, registryDir: String): Int =
-    GenState.withMaintenance(spark, registryDir) { maint =>
-      val versions = GenState.completeVersions(spark, registryDir, registryTable)
-      require(versions.nonEmpty, s"compactRegistry: no registry at $registryDir")
-      // fresh allocation for the same reason as the state-family compacts:
-      // a duplicate-key shadowed generation at versions.last + 1 would abort
-      // the targeted claim; the sweep below removes non-live dirs anyway
-      val (next, claim) = GenState.claimFresh(spark, registryDir, registryTable)
-      GenState.writeCompactManifest(spark, registryDir, next, versions, claim, registryTable)
-      // the COMMIT write lands through the fence, which also re-verifies
-      // the maintenance lease
-      GenState.fencedParquet(spark, registryDir, next, registryTable, claim,
-        registryTable, maintToken = Some(maint))(
-        spark.read.parquet(versions.map(registryPath(spark, registryDir, _)): _*).distinct())
-      // grace-horizon sweep: folded sources leave disk after the store TTL
-      GenState.sweepLeftovers(spark, registryDir, registryTable, except = next)
-      next
+    GenState.fold(spark, registryDir, registryTable, "Corpus.compactRegistry") {
+      (versions, _, _) =>
+        spark.read.parquet(versions.map(registryPath(spark, registryDir, _)): _*).distinct()
     }
 
   /** Pack capacity (tokens) for [[pack]]. */

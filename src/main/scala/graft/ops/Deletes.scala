@@ -2,13 +2,12 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One-call right-to-be-forgotten facade over the nineteen stateful
-  * modality entries' tombstone deletes. Every modality shares the same
-  * semantics — write a tombstone generation, shadow at read, purge at
-  * compact, revive on re-ingest — but each has its own entry point and id
-  * column; this dispatcher normalizes both, so a GDPR sweep over a
-  * multi-modality corpus is ONE loop over (stateDir, modality) pairs
-  * instead of seventeen call sites.
+/** One-call right-to-be-forgotten facade over every [[TombstoneFamily]].
+  * Every family shares the same semantics — write a tombstone generation,
+  * shadow at read, purge at compact, revive on re-ingest — but each has
+  * its own entry point and id column; this dispatcher normalizes both, so
+  * a GDPR sweep over a multi-modality corpus is ONE loop over (stateDir,
+  * modality) pairs.
   *
   * `ids` must be a single-column DataFrame; the column is renamed to
   * whatever the target modality stores (doc_id / vec_id / name), so the
@@ -16,58 +15,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Deletes {
 
-  /** One modality's entry in the registry: the id column its state stores,
-    * the family's commit table (what [[GenState]] keys generation liveness
-    * and sweeps on — [[purge]]'s forced final sweep needs it), and its
-    * delete and compact (the physical purge) entry points.
+  /** modality name → its family. The image, audio and video modalities
+    * ride the codec-parametric media chassis: the delete/compact path is
+    * codec-agnostic, so the alias is the contract.
     */
-  final case class Modality(
-      idColumn: String,
-      commitTable: String,
-      delete: (SparkSession, String, DataFrame) => Int,
-      compact: (SparkSession, String) => Int)
-
-  /** modality name → [[Modality]], one entry per tombstone modality. */
-  val modalities: Map[String, Modality] = {
-    // the image, audio and video modalities ride the codec-parametric media
-    // chassis: the delete/compact path is codec-agnostic, so the alias is
-    // the contract
-    val media = Modality("name", IncrementalMedia.commitTable,
-      IncrementalMedia.delete, IncrementalMedia.compact)
-    Map(
-      "exact" -> Modality("doc_id", IncrementalExact.commitTable,
-        IncrementalExact.delete(_, _, _), IncrementalExact.compact),
-      "cluster" -> Modality("doc_id", IncrementalDedup.commitTable,
-        IncrementalDedup.delete, IncrementalDedup.compact),
-      "minhash" -> Modality("doc_id", IncrementalMinHash.commitTable,
-        IncrementalMinHash.delete, IncrementalMinHash.compact),
-      "substring" -> Modality("doc_id", IncrementalSubstring.commitTable,
-        IncrementalSubstring.delete, IncrementalSubstring.compact),
-      "embedding" -> Modality("vec_id", IncrementalEmbedding.commitTable,
-        IncrementalEmbedding.delete, IncrementalEmbedding.compact),
-      "semantic" -> Modality("vec_id", IncrementalSemantic.commitTable,
-        IncrementalSemantic.delete, IncrementalSemantic.compact),
-      "ivf" -> Modality("vec_id", IncrementalIvf.commitTable,
-        IncrementalIvf.delete, IncrementalIvf.compact),
-      "ivfpq" -> Modality("vec_id", IncrementalIvfPq.commitTable,
-        IncrementalIvfPq.delete, IncrementalIvfPq.compact),
-      "media" -> media,
-      "audio" -> media,
-      "video" -> media,
-      "png" -> media,
-      "jpeg" -> media,
-      "tiff" -> media,
-      "rotmedia" -> Modality("name", IncrementalRotMedia.commitTable,
-        IncrementalRotMedia.delete, IncrementalRotMedia.compact),
-      "dsir" -> Modality("doc_id", IncrementalDsir.commitTable,
-        IncrementalDsir.delete, IncrementalDsir.compact),
-      "classifier" -> Modality("doc_id", IncrementalClassifier.commitTable,
-        IncrementalClassifier.delete, IncrementalClassifier.compact),
-      "card" -> Modality("doc_id", IncrementalCard.commitTable,
-        IncrementalCard.delete, IncrementalCard.compact),
-      "topk" -> Modality("doc_id", IncrementalTopK.commitTable,
-        IncrementalTopK.delete, IncrementalTopK.compact))
-  }
+  val modalities: Map[String, TombstoneFamily] = Map(
+      "exact" -> IncrementalExact,
+      "cluster" -> IncrementalDedup,
+      "minhash" -> IncrementalMinHash,
+      "substring" -> IncrementalSubstring,
+      "embedding" -> IncrementalEmbedding,
+      "semantic" -> IncrementalSemantic,
+      "ivf" -> IncrementalIvf,
+      "ivfpq" -> IncrementalIvfPq,
+      "rotmedia" -> IncrementalRotMedia,
+      "dsir" -> IncrementalDsir,
+      "classifier" -> IncrementalClassifier,
+      "card" -> IncrementalCard,
+      "topk" -> IncrementalTopK) ++
+    Seq("media", "audio", "video", "png", "jpeg", "tiff").map(_ -> IncrementalMedia)
 
   /** Tombstone `ids` in the state dir of one `modality`. Returns the new
     * tombstone generation. Unknown modalities fail fast with the known

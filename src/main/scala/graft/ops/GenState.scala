@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared mechanics of the GENERATIONAL dedup-state dirs
   * ([[IncrementalDedup]] d12, [[IncrementalEmbedding]] d14,
@@ -423,8 +423,8 @@ object GenState {
     }
   }
 
-  /** Size-tiered maintenance POLICY shared by the three incremental
-    * operators: fold when the live-generation count exceeds `maxLive`.
+  /** Size-tiered maintenance POLICY shared by every [[StateFamily]]:
+    * fold when the live-generation count exceeds `maxLive`.
     * Read amplification of a merge is O(live generations) — every probe
     * unions that many parquet dirs — so a daily-ingest deployment that
     * never compacts degrades linearly with history; bounding the count
@@ -1016,7 +1016,7 @@ object GenState {
   def fencedParquet(spark: SparkSession, stateDir: String, v: Int,
       table: String, token: String, commitTable: String = "labels",
       maintToken: Option[String] = None)(
-      df: org.apache.spark.sql.DataFrame): Unit = {
+      df: DataFrame): Unit = {
     // label the write job (guide §1.5) so bench/probe job censuses
     // attribute per-table; thread-local, restored after the write
     val sc = spark.sparkContext
@@ -1033,7 +1033,7 @@ object GenState {
   private def fencedParquetRename(spark: SparkSession, stateDir: String, v: Int,
       table: String, token: String, commitTable: String,
       maintToken: Option[String])(
-      df: org.apache.spark.sql.DataFrame): Unit = {
+      df: DataFrame): Unit = {
     val stage = s"$stateDir/v$v/.$table.stage-${token.take(8)}"
     df.write.mode("overwrite").parquet(stage)
     // the fence: the staged bytes are worthless unless this writer STILL
@@ -1077,7 +1077,7 @@ object GenState {
   private def fencedParquetPointer(spark: SparkSession, stateDir: String, v: Int,
       table: String, token: String, commitTable: String,
       maintToken: Option[String])(
-      df: org.apache.spark.sql.DataFrame): Unit = {
+      df: DataFrame): Unit = {
     val f = fs(spark, stateDir)
     val n = nonceOf(token)
     val dst = s"$stateDir/v$v/$table.g$n"
@@ -1661,6 +1661,45 @@ object GenState {
       r
     } finally releaseMaintenance(spark, stateDir, token)
   }
+
+  /** The compaction commit protocol every state family shares: under the
+    * maintenance lease, list the live versions (an empty state fails,
+    * naming `family`), claim a fresh generation `next`, and run
+    * `body(versions, next, claim)` — it writes `next`'s peer tables and
+    * returns the commit table's frame. Then record the `_COMPACTED`
+    * manifest, carry the folded ingest markers, land the commit write
+    * through the fence (claim AND maintenance lease re-verified), sweep,
+    * and return `next`. The commit frame runs after `body` returns, so a
+    * frame the body caches must stay cached until `fold` returns.
+    *
+    * The claim is a FRESH allocation, not the targeted one: `versions`
+    * excludes duplicate-key shadowed generations, so `versions.last + 1`
+    * can collide with a committed (shadowed) dir and a targeted claim
+    * would abort every compact until an unrelated ingest landed past it;
+    * a fresh number never collides, and the sweep removes every non-live
+    * dir wherever it sits. The manifest and the markers land BEFORE the
+    * commit, so a complete compacted generation always carries its folded
+    * history and its batch keys (re-delivery stays a no-op after
+    * maintenance), whatever the crash point. Both are writes into the
+    * uncommitted `next`, inert until the commit, so their order relative
+    * to the body's own pre-commit writes is free. The sweep honours the
+    * reader grace: the just-folded sources leave disk once the store TTL
+    * has passed, stale leftovers now.
+    */
+  def fold(spark: SparkSession, stateDir: String, commitTable: String,
+      family: String)(body: (Seq[Int], Int, String) => DataFrame): Int =
+    withMaintenance(spark, stateDir) { maint =>
+      val versions = completeVersions(spark, stateDir, commitTable)
+      require(versions.nonEmpty, s"$family: no state at $stateDir")
+      val (next, claim) = claimFresh(spark, stateDir, commitTable)
+      val commit = body(versions, next, claim)
+      writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
+      copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
+      fencedParquet(spark, stateDir, next, commitTable, claim, commitTable,
+        maintToken = Some(maint))(commit)
+      sweepLeftovers(spark, stateDir, commitTable, except = next)
+      next
+    }
 
   // ---- probe manifests (multi-writer pair-graph reconciliation) -----------
   //

@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   * re-delivered batches no-ops (the additive half would double-count;
   * the distinct half would not — markers protect the pair).
   */
-object IncrementalCard {
+object IncrementalCard extends TombstoneFamily {
 
-  private[ops] val commitTable = "partials"
+  val commitTable = "partials"
+  val idColumn = "doc_id"
 
   private def partialsPath(spark: SparkSession, stateDir: String, v: Int) =
     GenState.tablePath(spark, stateDir, v, "partials")
@@ -47,11 +48,25 @@ object IncrementalCard {
   private def docsPath(spark: SparkSession, stateDir: String, v: Int) =
     GenState.tablePath(spark, stateDir, v, "docs")
 
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
+  /** The additive half of the card: per-source sums of per-doc stats. */
+  private def partialsOf(stats: DataFrame): DataFrame =
+    stats.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"),
+        sum(col("n_chars")).as("n_chars"),
+        sum(col("sc").cast("decimal(38,0)")).as("sc_sum"))
 
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
+  /** The partials of `versions` re-aggregated into one row per source. */
+  private def foldedPartials(spark: SparkSession, stateDir: String,
+      versions: Seq[Int]): DataFrame =
+    spark.read.parquet(versions.map(partialsPath(spark, stateDir, _)): _*)
+      .groupBy(col("source"))
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
+        sum(col("n_chars")).as("n_chars"), sum(col("sc_sum")).as("sc_sum"))
+
+  /** Mergeable HLL sketches of the distinct keys, per source. */
+  private def sketchesOf(stats: DataFrame): DataFrame =
+    stats.groupBy(col("source"))
+      .agg(expr("hll_sketch_agg(h)").as("hsk"), expr("hll_sketch_agg(lang)").as("lsk"))
 
   /** Ingest one batch of documents (doc_ids disjoint from prior ingests
     * unless re-delivered under the same `batchKey`).
@@ -99,17 +114,12 @@ object IncrementalCard {
         // ingest pays both (one extra aggregation of the already-computed
         // stats, kilobytes written)
         () => GenState.fencedParquet(spark, stateDir, next, "sketches", claim,
-          commitTable)(stats.groupBy(col("source"))
-            .agg(expr("hll_sketch_agg(h)").as("hsk"),
-              expr("hll_sketch_agg(lang)").as("lsk")))))
+          commitTable)(sketchesOf(stats))))
       // the COMMIT write lands through the fence: a writer stalled past
       // the TTL whose in-flight dir a concurrent sweep reclaimed aborts
       // here, never landing a torn complete generation
       GenState.fencedParquet(spark, stateDir, next, "partials", claim, commitTable)(
-        stats.groupBy(col("source"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"),
-            sum(col("n_chars")).as("n_chars"),
-            sum(col("sc").cast("decimal(38,0)")).as("sc_sum")))
+        partialsOf(stats))
     } finally stats.unpersist()
     next
   }
@@ -176,11 +186,7 @@ object IncrementalCard {
     require(versions.nonEmpty, s"IncrementalCard.serve: no state at $stateDir")
     if (LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty)
       return TextAnalysis.cardOf(survivorStats(spark, stateDir, versions))
-    val sums = spark.read.parquet(versions.map(partialsPath(spark, stateDir, _)): _*)
-      .groupBy(col("source"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-        sum(col("n_chars")).as("n_chars"),
-        sum(col("sc_sum")).as("sc_sum"))
+    val sums = foldedPartials(spark, stateDir, versions)
     val nd = spark.read.parquet(versions.map(hashesPath(spark, stateDir, _)): _*)
       .distinct().groupBy(col("source"))
       .agg(count(lit(1)).as("n_distinct_texts"))
@@ -219,17 +225,8 @@ object IncrementalCard {
     // approximate card under deletion.
     val delVs = LabelState.tombstoneVersions(spark, stateDir, versions)
     val sums =
-      if (delVs.isEmpty)
-        spark.read.parquet(versions.map(partialsPath(spark, stateDir, _)): _*)
-          .groupBy(col("source"))
-          .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-            sum(col("n_chars")).as("n_chars"),
-            sum(col("sc_sum")).as("sc_sum"))
-      else survivorStats(spark, stateDir, versions)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"),
-          sum(col("n_chars")).as("n_chars"),
-          sum(col("sc").cast("decimal(38,0)")).as("sc_sum"))
+      if (delVs.isEmpty) foldedPartials(spark, stateDir, versions)
+      else partialsOf(survivorStats(spark, stateDir, versions))
     val est = spark.read.parquet(versions.map(sketchesPath(spark, stateDir, _)): _*)
       .groupBy(col("source"))
       .agg(expr("cast(round(hll_sketch_estimate(hll_union_agg(hsk))) as bigint)")
@@ -260,83 +257,33 @@ object IncrementalCard {
     * fabricate a sidecar that would wrongly pass [[delete]]'s retention
     * check).
     */
-  def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalCard.compact: no state at $stateDir")
-    // FRESH allocation, not the targeted claim: `versions` excludes
-    // duplicate-key shadowed generations, so versions.last + 1 can collide
-    // with a committed (shadowed) dir and the targeted claim would abort
-    // every compact until an unrelated ingest landed past it; a fresh
-    // number never collides, and the sweep below removes every non-live
-    // dir regardless of where it sits
-    val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-    val haveSidecars = versions.forall(v =>
-      GenState.tableExists(spark, stateDir, v, "docs"))
-    val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
-    if (hasTombs) {
-      // tombstoned fold: one survivors projection feeds all five tables
-      val survivors = survivorStats(spark, stateDir, versions).persist()
-      try {
-        GenState.fencedParquet(spark, stateDir, next, "docs", claim, commitTable)(
-          survivors)
-        GenState.fencedParquet(spark, stateDir, next, "hashes", claim, commitTable)(
-          survivors.select(col("source"), col("h")).distinct())
-        GenState.fencedParquet(spark, stateDir, next, "langs", claim, commitTable)(
-          survivors.select(col("source"), col("lang")).distinct())
-        GenState.fencedParquet(spark, stateDir, next, "sketches", claim, commitTable)(
-          survivors.groupBy(col("source"))
-            .agg(expr("hll_sketch_agg(h)").as("hsk"),
-              expr("hll_sketch_agg(lang)").as("lsk")))
-        GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-        GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-        // the COMMIT write lands through the fence, which also
-        // re-verifies the maintenance lease
-        GenState.fencedParquet(spark, stateDir, next, "partials", claim,
-          commitTable, maintToken = Some(maint))(
-          survivors.groupBy(col("source"))
-            .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"),
-              sum(col("n_chars")).as("n_chars"),
-              sum(col("sc").cast("decimal(38,0)")).as("sc_sum")))
-      } finally survivors.unpersist()
-      // grace-horizon sweep: folded sources leave disk after the store TTL
-      GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-      return next
-    }
-    if (haveSidecars) {
-      GenState.fencedParquet(spark, stateDir, next, "docs", claim, commitTable)(
-        spark.read.parquet(versions.map(docsPath(spark, stateDir, _)): _*))
-    }
-    GenState.fencedParquet(spark, stateDir, next, "hashes", claim, commitTable)(
-      spark.read.parquet(versions.map(hashesPath(spark, stateDir, _)): _*)
-        .distinct())
-    GenState.fencedParquet(spark, stateDir, next, "langs", claim, commitTable)(
-      spark.read.parquet(versions.map(langsPath(spark, stateDir, _)): _*)
-        .distinct())
-    GenState.fencedParquet(spark, stateDir, next, "sketches", claim, commitTable)(
-      spark.read.parquet(versions.map(sketchesPath(spark, stateDir, _)): _*)
-        .groupBy(col("source"))
-        .agg(expr("hll_union_agg(hsk)").as("hsk"), expr("hll_union_agg(lsk)").as("lsk")))
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-    // the COMMIT write lands through the fence, which also re-verifies
-    // the maintenance lease
-    GenState.fencedParquet(spark, stateDir, next, "partials", claim,
-      commitTable, maintToken = Some(maint))(
-      spark.read.parquet(versions.map(partialsPath(spark, stateDir, _)): _*)
-        .groupBy(col("source"))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-          sum(col("n_chars")).as("n_chars"), sum(col("sc_sum")).as("sc_sum")))
-    // grace-horizon sweep: folded sources leave disk after the store TTL
-    GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-    next
+  def compact(spark: SparkSession, stateDir: String): Int = {
+    // the tombstoned fold's survivors stay cached until the commit write
+    // (the fold's last frame) has run
+    var cached: Option[DataFrame] = None
+    try fold(spark, stateDir) { (versions, next, claim) =>
+      def write(table: String)(df: DataFrame): Unit =
+        GenState.fencedParquet(spark, stateDir, next, table, claim, commitTable)(df)
+      if (LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty) {
+        // tombstoned fold: one survivors projection feeds all five tables
+        val survivors = survivorStats(spark, stateDir, versions).persist()
+        cached = Some(survivors)
+        write("docs")(survivors)
+        write("hashes")(survivors.select(col("source"), col("h")).distinct())
+        write("langs")(survivors.select(col("source"), col("lang")).distinct())
+        write("sketches")(sketchesOf(survivors))
+        partialsOf(survivors)
+      } else {
+        def all(path: (SparkSession, String, Int) => String): DataFrame =
+          spark.read.parquet(versions.map(path(spark, stateDir, _)): _*)
+        if (versions.forall(v => GenState.tableExists(spark, stateDir, v, "docs")))
+          write("docs")(all(docsPath))
+        write("hashes")(all(hashesPath).distinct())
+        write("langs")(all(langsPath).distinct())
+        write("sketches")(all(sketchesPath).groupBy(col("source"))
+          .agg(expr("hll_union_agg(hsk)").as("hsk"), expr("hll_union_agg(lsk)").as("lsk")))
+        foldedPartials(spark, stateDir, versions)
+      }
+    } finally cached.foreach(_.unpersist())
   }
-
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
 }

@@ -28,15 +28,10 @@ import org.apache.spark.sql.functions._
   * featurize pass over the corpus with the re-aggregated counts
   * broadcast back.
   */
-object IncrementalClassifier {
+object IncrementalClassifier extends TombstoneFamily {
 
-  private[ops] val commitTable = "counts"
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
+  val commitTable = "counts"
+  val idColumn = "doc_id"
 
   private def countsPath(spark: SparkSession, stateDir: String, v: Int) =
     GenState.tablePath(spark, stateDir, v, "counts")
@@ -178,46 +173,17 @@ object IncrementalClassifier {
     * pass [[delete]]'s retention check).
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
+    fold(spark, stateDir) { (versions, next, claim) =>
+      val folded = modelCounts(spark, stateDir)
+      if (versions.forall(v => GenState.tableExists(spark, stateDir, v, "docs"))) {
+        val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
+        def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
+        GenState.fencedParquet(spark, stateDir, next, "docs", claim, commitTable)(
+          if (!hasTombs) spark.read.parquet(versions.map(docsPath(spark, stateDir, _)): _*)
+          else LabelState.purgeByGen(tombs,
+            versions.map(v => (v, spark.read.parquet(docsPath(spark, stateDir, v)))),
+            Seq("doc_id")))
+      }
+      folded
     }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalClassifier.compact: no state at $stateDir")
-    // FRESH allocation, not the targeted claim: `versions` excludes
-    // duplicate-key shadowed generations, so versions.last + 1 can collide
-    // with a committed (shadowed) dir and the targeted claim would abort
-    // every compact until an unrelated ingest landed past it; a fresh
-    // number never collides, and the sweep below removes every non-live
-    // dir regardless of where it sits
-    val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-    val folded = modelCounts(spark, stateDir)
-    val haveSidecars = versions.forall(v =>
-      GenState.tableExists(spark, stateDir, v, "docs"))
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-    if (haveSidecars) {
-      val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
-      def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
-      GenState.fencedParquet(spark, stateDir, next, "docs", claim, commitTable)(
-        if (!hasTombs) spark.read.parquet(versions.map(docsPath(spark, stateDir, _)): _*)
-        else LabelState.purgeByGen(tombs,
-          versions.map(v => (v, spark.read.parquet(docsPath(spark, stateDir, v)))),
-          Seq("doc_id")))
-    }
-    // the COMMIT write lands through the fence, which also re-verifies
-    // the maintenance lease
-    GenState.fencedParquet(spark, stateDir, next, "counts", claim, commitTable,
-      maintToken = Some(maint))(folded)
-    // grace-horizon sweep: folded sources leave disk once the store TTL
-    // passes (racing readers finish their snapshot); stale leftovers now
-    GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
 }

@@ -40,15 +40,12 @@ import org.apache.spark.sql.functions._
   * band index — no re-read of old text, no re-signing (the plan spec pins
   * exactly one `simhash32` in the merge job).
   */
-object IncrementalDedup {
+object IncrementalDedup extends TombstoneFamily {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The commit table GenState keys generation liveness on — the value
-    * [[GenState]]'s defaults assume; exposed so cross-family consumers
-    * ([[Deletes.modalities]]) can never silently diverge.
-    */
-  private[ops] val commitTable = "labels"
+  val commitTable = "labels"
+  val idColumn = "doc_id"
 
   // ---- 32-bit saturation guard ---------------------------------------------
   //
@@ -160,19 +157,6 @@ object IncrementalDedup {
       .where(col("hamming") <= maxHamming)
       .dropDuplicates("d1", "d2")
   }
-
-  /** All LIVE state generations under `stateDir`, ascending (a generation
-    * is complete when its labels table committed — bands are written
-    * first, so labels' _SUCCESS implies both; versions folded by a
-    * committed [[compact]] are excluded via its `_COMPACTED` manifest).
-    * Not necessarily contiguous: compaction leaves gaps.
-    */
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir)
-
-  /** Latest complete state generation under `stateDir`. */
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    completeVersions(spark, stateDir).lastOption
 
   // resolved through [[GenState.tablePath]]: publish-mode-agnostic reads;
   // `tok` is the claim token for pre-commit reads of an OWN in-flight
@@ -431,85 +415,57 @@ object IncrementalDedup {
     * every effectively-deleted doc (the purge point — deleted bytes leave
     * disk with the source dirs), the labels snapshot is the
     * tombstone-corrected labeling, and no tombstones table is carried.
-    * Crash-safe at EVERY point: the new generation's labels commit LAST,
-    * so a crash before that leaves the old generations intact and the
-    * half-written one ignored; and the folded source list is recorded in
-    * the new generation's `_COMPACTED` manifest BEFORE the commit, so a
-    * crash in the commit-to-delete window (both compacted and sources
-    * complete on disk) cannot double the index — [[completeVersions]]
-    * excludes manifest-listed sources, and the next compact sweeps the
-    * leftover dirs. Returns the new generation number.
+    * Crash-safe at every point through [[GenState.fold]]: the labels
+    * commit last, after the `_COMPACTED` manifest, so a crash in the
+    * commit-to-delete window cannot double the index. Returns the new
+    * generation number.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalDedup.compact: no state at $stateDir")
-    // fresh allocation (multi-writer merges can leave abandoned claimed
-    // dirs and shadowed duplicate-key generations a targeted
-    // versions.last+1 claim would collide with); serialized against other
-    // compactors by the _MAINT lease, concurrent-safe against live merges
-    val (next, claim) = GenState.claimFresh(spark, stateDir)
-    // per-GENERATION purge ([[LabelState.purgeByGen]]): rows older than
-    // their id's newest tombstone leave disk EVEN IF the id was
-    // re-ingested — a delete-then-re-ingest must not retain its
-    // pre-delete bands/pairs (duplicate index rows + stale edges) through
-    // maintenance. Tombstone-free state keeps the single multi-path scan.
-    val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
-    def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
-    def purgedBands(v: Int): DataFrame =
-      if (!hasTombs) spark.read.parquet(bandsPath(spark, stateDir, v))
-      else LabelState.purgeByGen(tombs,
-        Seq((v, spark.read.parquet(bandsPath(spark, stateDir, v)))), Seq("doc_id"))
-    GenState.writeProbed(spark, stateDir, next, Seq(next), claim)
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim)
-    GenState.fencedParquet(spark, stateDir, next, "bands", claim)(
-      if (!hasTombs) spark.read.parquet(versions.map(bandsPath(spark, stateDir, _)): _*)
-      else LabelState.purgeByGen(tombs,
-        versions.map(v => (v, spark.read.parquet(bandsPath(spark, stateDir, v)))),
-        Seq("doc_id")))
-    // outstanding concurrent-commit reconciliation becomes DURABLE here:
-    // recon cross pairs from PURGED bands (deleted docs never resurface),
-    // folded into the pair table, and the labels snapshot fully corrected
-    val recon = reconInputs(spark, stateDir, versions, purgedBands)
-    val pairVs = versions.filter(v => GenState.tableExists(spark, stateDir, v, "pairs"))
-    require(recon.isEmpty || pairVs == versions,
-      s"IncrementalDedup.compact: concurrent commits at $stateDir need every " +
-        "generation's pairs table to reconcile — pre-retention layout found")
-    if (pairVs == versions) {
-      val stored =
-        (if (!hasTombs)
-           spark.read.parquet(pairVs.map(pairsPath(spark, stateDir, _)): _*)
-             .select(col("d1").cast("long"), col("d2").cast("long"))
-         else LabelState.purgePairsByGen(tombs,
-           LabelState.effectiveTombstones(spark, stateDir, versions, "bands", "doc_id"),
-           pairVs.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v))
-             .select(col("d1").cast("long"), col("d2").cast("long")))),
-           Seq("d1", "d2")))
-      GenState.fencedParquet(spark, stateDir, next, "pairs", claim)(
-        recon.map(_._1).fold(stored)(r => stored.unionByName(
-            r.select(col("d1").cast("long"), col("d2").cast("long"))))
-          .dropDuplicates("d1", "d2"))
-    }
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim)
-    GenState.fencedParquet(spark, stateDir, next, "labels", claim,
-        maintToken = Some(maint))(
+    fold(spark, stateDir) { (versions, next, claim) =>
+      // per-GENERATION purge ([[LabelState.purgeByGen]]): rows older than
+      // their id's newest tombstone leave disk EVEN IF the id was
+      // re-ingested — a delete-then-re-ingest must not retain its
+      // pre-delete bands/pairs (duplicate index rows + stale edges) through
+      // maintenance. Tombstone-free state keeps the single multi-path scan.
+      val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
+      def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
+      def purgedBands(v: Int): DataFrame =
+        if (!hasTombs) spark.read.parquet(bandsPath(spark, stateDir, v))
+        else LabelState.purgeByGen(tombs,
+          Seq((v, spark.read.parquet(bandsPath(spark, stateDir, v)))), Seq("doc_id"))
+      GenState.writeProbed(spark, stateDir, next, Seq(next), claim)
+      GenState.fencedParquet(spark, stateDir, next, "bands", claim)(
+        if (!hasTombs) spark.read.parquet(versions.map(bandsPath(spark, stateDir, _)): _*)
+        else LabelState.purgeByGen(tombs,
+          versions.map(v => (v, spark.read.parquet(bandsPath(spark, stateDir, v)))),
+          Seq("doc_id")))
+      // outstanding concurrent-commit reconciliation becomes DURABLE here:
+      // recon cross pairs from PURGED bands (deleted docs never resurface),
+      // folded into the pair table, and the labels snapshot fully corrected
+      val recon = reconInputs(spark, stateDir, versions, purgedBands)
+      val pairVs = versions.filter(v => GenState.tableExists(spark, stateDir, v, "pairs"))
+      require(recon.isEmpty || pairVs == versions,
+        s"IncrementalDedup.compact: concurrent commits at $stateDir need every " +
+          "generation's pairs table to reconcile — pre-retention layout found")
+      if (pairVs == versions) {
+        val stored =
+          (if (!hasTombs)
+             spark.read.parquet(pairVs.map(pairsPath(spark, stateDir, _)): _*)
+               .select(col("d1").cast("long"), col("d2").cast("long"))
+           else LabelState.purgePairsByGen(tombs,
+             LabelState.effectiveTombstones(spark, stateDir, versions, "bands", "doc_id"),
+             pairVs.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v))
+               .select(col("d1").cast("long"), col("d2").cast("long")))),
+             Seq("d1", "d2")))
+        GenState.fencedParquet(spark, stateDir, next, "pairs", claim)(
+          recon.map(_._1).fold(stored)(r => stored.unionByName(
+              r.select(col("d1").cast("long"), col("d2").cast("long"))))
+            .dropDuplicates("d1", "d2"))
+      }
       LabelState.deletedAwareLabels(spark, stateDir, versions, "bands", "doc_id",
           recon.map(_._1), recon.map(_._2))
-        .withColumn("gen", lit(next)))
-    GenState.sweepLeftovers(spark, stateDir, "labels", except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]: fold when live
-    * generations exceed `maxLive` (probe read amplification is O(live)).
-    */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive)(compact(spark, stateDir))
+        .withColumn("gen", lit(next))
+    }
 
   /** The d7-shaped cluster table from the current state. */
   def clusters(spark: SparkSession, stateDir: String): DataFrame =

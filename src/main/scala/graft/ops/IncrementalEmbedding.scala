@@ -32,19 +32,10 @@ import org.apache.spark.sql.functions._
   * exchange ever carries a vector once per candidate pair, and worst-case
   * candidate fan-out is O(buckets · cap²), corpus-independent.
   */
-object IncrementalEmbedding {
+object IncrementalEmbedding extends TombstoneFamily {
 
-  /** The commit table GenState keys generation liveness on — the value
-    * [[GenState]]'s defaults assume; exposed so cross-family consumers
-    * ([[Deletes.modalities]]) can never silently diverge.
-    */
-  private[ops] val commitTable = "labels"
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir)
+  val commitTable = "labels"
+  val idColumn = "vec_id"
 
   // resolved through [[GenState.tablePath]]: publish-mode-agnostic reads;
   // `tok` is the claim token for pre-commit reads of an OWN in-flight
@@ -245,70 +236,49 @@ object IncrementalEmbedding {
     * parquet losslessly, so folded vectors verify bit-identically.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalEmbedding.compact: no state at $stateDir")
-    // fresh allocation (multi-writer merges can leave abandoned claimed
-    // dirs and shadowed duplicate-key generations); serialized against
-    // other compactors by the _MAINT lease, concurrent-safe vs live merges
-    val (next, claim) = GenState.claimFresh(spark, stateDir)
-    // tombstones applied PHYSICALLY at the fold, per-GENERATION
-    // ([[LabelState.purgeByGen]]): pre-delete vecs/pairs leave disk even
-    // for re-ingested ids; the labels snapshot is the corrected labeling,
-    // no tombstones carried. Tombstone-free state keeps the one-scan fold.
-    val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
-    def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
-    def purgedVecs(v: Int): DataFrame =
-      if (!hasTombs) spark.read.parquet(vecsPath(spark, stateDir, v))
-      else LabelState.purgeByGen(tombs,
-        Seq((v, spark.read.parquet(vecsPath(spark, stateDir, v)))), Seq("vec_id"))
-    GenState.writeProbed(spark, stateDir, next, Seq(next), claim)
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim)
-    GenState.fencedParquet(spark, stateDir, next, "vecs", claim)(
-      if (!hasTombs) spark.read.parquet(versions.map(vecsPath(spark, stateDir, _)): _*)
-      else LabelState.purgeByGen(tombs,
-        versions.map(v => (v, spark.read.parquet(vecsPath(spark, stateDir, v)))),
-        Seq("vec_id")))
-    // outstanding concurrent-commit reconciliation becomes DURABLE here
-    // (recon cross pairs from PURGED vecs — deleted ids never resurface)
-    val recon = reconInputs(spark, stateDir, versions, purgedVecs)
-    val pairVs = versions.filter(v => GenState.tableExists(spark, stateDir, v, "pairs"))
-    require(recon.isEmpty || pairVs == versions,
-      s"IncrementalEmbedding.compact: concurrent commits at $stateDir need every " +
-        "generation's pairs table to reconcile — pre-retention layout found")
-    if (pairVs == versions) {
-      val stored =
-        (if (!hasTombs)
-           spark.read.parquet(pairVs.map(pairsPath(spark, stateDir, _)): _*)
-             .select(col("d1").cast("long"), col("d2").cast("long"))
-         else LabelState.purgePairsByGen(tombs,
-           LabelState.effectiveTombstones(spark, stateDir, versions, "vecs", "vec_id"),
-           pairVs.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v))
-             .select(col("d1").cast("long"), col("d2").cast("long")))),
-           Seq("d1", "d2")))
-      GenState.fencedParquet(spark, stateDir, next, "pairs", claim)(
-        recon.map(_._1).fold(stored)(r => stored.unionByName(
-            r.select(col("d1").cast("long"), col("d2").cast("long"))))
-          .dropDuplicates("d1", "d2"))
-    }
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim)
-    GenState.fencedParquet(spark, stateDir, next, "labels", claim,
-        maintToken = Some(maint))(
+    fold(spark, stateDir) { (versions, next, claim) =>
+      // tombstones applied PHYSICALLY at the fold, per-GENERATION
+      // ([[LabelState.purgeByGen]]): pre-delete vecs/pairs leave disk even
+      // for re-ingested ids; the labels snapshot is the corrected labeling,
+      // no tombstones carried. Tombstone-free state keeps the one-scan fold.
+      val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
+      def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
+      def purgedVecs(v: Int): DataFrame =
+        if (!hasTombs) spark.read.parquet(vecsPath(spark, stateDir, v))
+        else LabelState.purgeByGen(tombs,
+          Seq((v, spark.read.parquet(vecsPath(spark, stateDir, v)))), Seq("vec_id"))
+      GenState.writeProbed(spark, stateDir, next, Seq(next), claim)
+      GenState.fencedParquet(spark, stateDir, next, "vecs", claim)(
+        if (!hasTombs) spark.read.parquet(versions.map(vecsPath(spark, stateDir, _)): _*)
+        else LabelState.purgeByGen(tombs,
+          versions.map(v => (v, spark.read.parquet(vecsPath(spark, stateDir, v)))),
+          Seq("vec_id")))
+      // outstanding concurrent-commit reconciliation becomes DURABLE here
+      // (recon cross pairs from PURGED vecs — deleted ids never resurface)
+      val recon = reconInputs(spark, stateDir, versions, purgedVecs)
+      val pairVs = versions.filter(v => GenState.tableExists(spark, stateDir, v, "pairs"))
+      require(recon.isEmpty || pairVs == versions,
+        s"IncrementalEmbedding.compact: concurrent commits at $stateDir need every " +
+          "generation's pairs table to reconcile — pre-retention layout found")
+      if (pairVs == versions) {
+        val stored =
+          (if (!hasTombs)
+             spark.read.parquet(pairVs.map(pairsPath(spark, stateDir, _)): _*)
+               .select(col("d1").cast("long"), col("d2").cast("long"))
+           else LabelState.purgePairsByGen(tombs,
+             LabelState.effectiveTombstones(spark, stateDir, versions, "vecs", "vec_id"),
+             pairVs.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v))
+               .select(col("d1").cast("long"), col("d2").cast("long")))),
+             Seq("d1", "d2")))
+        GenState.fencedParquet(spark, stateDir, next, "pairs", claim)(
+          recon.map(_._1).fold(stored)(r => stored.unionByName(
+              r.select(col("d1").cast("long"), col("d2").cast("long"))))
+            .dropDuplicates("d1", "d2"))
+      }
       LabelState.deletedAwareLabels(spark, stateDir, versions, "vecs", "vec_id",
           recon.map(_._1), recon.map(_._2))
-        .withColumn("gen", lit(next)))
-    GenState.sweepLeftovers(spark, stateDir, "labels", except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive)(compact(spark, stateDir))
+        .withColumn("gen", lit(next))
+    }
 
   /** The d11-shaped cluster table from the current state (latest-wins
     * fold over the live label deltas — see [[LabelState]]), with the

@@ -33,9 +33,10 @@ import graft.ops.Text.normalized
   * surviving sidecar rows (broadcast-scoped, O(deleted docs) correction
   * work); [[compact]] applies tombstones physically — the GDPR purge.
   */
-object IncrementalExact {
+object IncrementalExact extends TombstoneFamily {
 
-  private[ops] val commitTable = "hashes"
+  val commitTable = "hashes"
+  val idColumn = "doc_id"
 
   /** Reserved marker namespace for [[delete]] keys — see the note there.
     * FORMAT NOTE: state dirs whose deletes were recorded before this
@@ -48,12 +49,6 @@ object IncrementalExact {
     * re-open the cross-op collision this namespace closes.)
     */
   private val deletePrefix = "delete."
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
 
   // resolved through [[GenState.tablePath]]: publish-mode-agnostic reads
   // (a pointer-committed generation's tables live in nonce-named dirs);
@@ -144,8 +139,12 @@ object IncrementalExact {
     * re-ingested or compacted from source before deletes are possible —
     * there is nothing to subtract from).
     */
+  def delete(spark: SparkSession, stateDir: String, ids: DataFrame): Int =
+    delete(spark, stateDir, ids, None)
+
+  /** The keyed delete: a re-delivered `batchKey` is a no-op. */
   def delete(spark: SparkSession, stateDir: String, ids: DataFrame,
-      batchKey: Option[String] = None): Int = {
+      batchKey: Option[String]): Int = {
     val live = completeVersions(spark, stateDir)
     require(live.nonEmpty, s"IncrementalExact.delete: no state at $stateDir")
     live.foreach(v => require(GenState.tableExists(spark, stateDir, v, "docs"),
@@ -273,24 +272,8 @@ object IncrementalExact {
     * folds partials the original way and stays sidecar-free.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalExact.compact: no state at $stateDir")
-    // FRESH allocation, not the targeted claim: `versions` excludes
-    // duplicate-key shadowed generations, so versions.last + 1 can collide
-    // with a committed (shadowed) dir and the targeted claim would abort
-    // every compact until an unrelated ingest landed past it; a fresh
-    // number never collides, and the sweep below removes every non-live
-    // dir regardless of where it sits
-    val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-    val sidecars = versions.forall(v => GenState.tableExists(spark, stateDir, v, "docs"))
-    val folded =
-      if (!sidecars)
+    fold(spark, stateDir) { (versions, next, claim) =>
+      if (!versions.forall(v => GenState.tableExists(spark, stateDir, v, "docs")))
         // pre-sidecar layout: no tombstones possible ([[delete]] refuses),
         // the fold is the pure partial re-aggregation
         spark.read.parquet(versions.map(hashesPath(spark, stateDir, _)): _*)
@@ -305,26 +288,5 @@ object IncrementalExact {
           .groupBy(col("h"))
           .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
       }
-    // manifest BEFORE the commit write: _COMPACTED must exist whenever the
-    // compacted generation is complete. (The single-table layout writes
-    // the manifest first, then the table whose _SUCCESS commits.)
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-    // markers travel with the fold: a re-delivered batch key must stay a
-    // no-op even after its generation was compacted away
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-    GenState.assertWritable(spark, stateDir, next, claim, commitTable)
-    // the COMMIT write lands through the fence, which also re-verifies
-    // the maintenance lease (a stalled compactor stolen from aborts here)
-    GenState.fencedParquet(spark, stateDir, next, "hashes", claim, commitTable,
-      maintToken = Some(maint))(folded)
-    // grace-horizon sweep: the just-folded sources (now manifest-listed,
-    // hence non-live) leave disk once the store TTL passes — racing
-    // readers finish their snapshot first; stale leftovers sweep now
-    GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
+    }
 }

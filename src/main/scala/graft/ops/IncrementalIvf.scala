@@ -32,15 +32,10 @@ import org.apache.spark.sql.functions._
   * shuffles: postings are written cell-tagged where they land, probes
   * broadcast, and the top-k is one window over candidate cells.
   */
-object IncrementalIvf {
+object IncrementalIvf extends TombstoneFamily {
 
-  private[ops] val commitTable = "postings"
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
+  val commitTable = "postings"
+  val idColumn = "vec_id"
 
   // resolved through [[GenState.tablePath]] — publish-mode-agnostic reads
   private def postingsPath(spark: SparkSession, stateDir: String, v: Int) =
@@ -162,28 +157,5 @@ object IncrementalIvf {
     * tombstoned bytes from disk — the GDPR purge point).
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      val versions = completeVersions(spark, stateDir)
-      require(versions.nonEmpty, s"IncrementalIvf.compact: no state at $stateDir")
-      // FRESH allocation, not the targeted claim: `versions` excludes
-      // duplicate-key shadowed generations, so versions.last + 1 can collide
-      // with a committed (shadowed) dir and the targeted claim would abort
-      // every compact until an unrelated ingest landed past it; a fresh
-      // number never collides, and the sweep below removes every non-live
-      // dir regardless of where it sits
-      val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-      GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-      // the COMMIT write lands through the fence, which also re-verifies
-      // the maintenance lease
-      GenState.fencedParquet(spark, stateDir, next, "postings", claim, commitTable,
-        maintToken = Some(maint))(livePostings(spark, stateDir))
-      // grace-horizon sweep: folded sources leave disk once the store TTL
-      // passes (racing readers finish their snapshot); stale leftovers now
-      GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-      next
-    }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
+    fold(spark, stateDir)((_, _, _) => livePostings(spark, stateDir))
 }

@@ -33,21 +33,16 @@ import graft.sources.Tables
   * against the codebook that produced them, so mixing regimes would
   * corrupt every downstream ADC score silently.
   */
-object IncrementalIvfPq {
+object IncrementalIvfPq extends TombstoneFamily {
 
-  private[ops] val commitTable = "codes"
+  val commitTable = "codes"
+  val idColumn = "vec_id"
 
   // resolved through [[GenState.tablePath]] — publish-mode-agnostic reads
   private def codesPath(spark: SparkSession, stateDir: String, v: Int) =
     GenState.tablePath(spark, stateDir, v, "codes")
   private def deletesPath(spark: SparkSession, stateDir: String, v: Int) =
     GenState.tablePath(spark, stateDir, v, "deletes")
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
 
   /** The frozen reference vectors — the ONE persisted artifact both model
     * halves derive from: IVF centroids are the vectors themselves
@@ -238,30 +233,5 @@ object IncrementalIvfPq {
     * rows leave disk, the GDPR purge point.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      val versions = completeVersions(spark, stateDir)
-      require(versions.nonEmpty, s"IncrementalIvfPq.compact: no state at $stateDir")
-      // FRESH allocation, not the targeted claim: `versions` excludes
-      // duplicate-key shadowed generations, so versions.last + 1 can collide
-      // with a committed (shadowed) dir and the targeted claim would abort
-      // every compact until an unrelated ingest landed past it; a fresh
-      // number never collides, and the sweep below removes every non-live
-      // dir regardless of where it sits
-      val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-      GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-      // markers travel with the fold: a re-delivered batch key must stay a
-      // no-op even after its generation was compacted away
-      GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-      // the COMMIT write lands through the fence, which also re-verifies
-      // the maintenance lease
-      GenState.fencedParquet(spark, stateDir, next, "codes", claim, commitTable,
-        maintToken = Some(maint))(liveCodes(spark, stateDir))
-      // grace-horizon sweep: folded sources leave disk once the store TTL
-      // passes (racing readers finish their snapshot); stale leftovers now
-      GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-      next
-    }
-
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
+    fold(spark, stateDir)((_, _, _) => liveCodes(spark, stateDir))
 }

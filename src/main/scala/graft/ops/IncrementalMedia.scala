@@ -40,9 +40,10 @@ import org.apache.spark.sql.functions._
   * read and compact time. See [[merge]]/[[pairs]]/[[compact]]; the
   * concurrent-commit scenarios are pinned in MediaMultiWriterSpec.
   */
-object IncrementalMedia {
+object IncrementalMedia extends TombstoneFamily {
 
-  private[ops] val commitTable = "pairs"
+  val commitTable = "pairs"
+  val idColumn = "name"
 
   /** Pluggable per-asset signature codecs: the chassis (generations,
     * block-index probe, tombstones, compaction) is MODALITY-GENERIC —
@@ -78,12 +79,6 @@ object IncrementalMedia {
     "y4m-framehash" -> (bytes =>
       Video.decodeY4m(bytes).toSeq.flatMap(v =>
         Video.signature(v).zipWithIndex.map { case (sig, j) => (j, sig) })))
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
 
   // resolved through [[GenState.tablePath]]: publish-mode-agnostic reads;
   // `tok` is the claim token for pre-commit reads of an OWN in-flight
@@ -289,68 +284,42 @@ object IncrementalMedia {
     * generation pair (computed from the PURGED per-generation sigs, so
     * deleted names never resurface through reconciliation), and the
     * compacted generation's `_PROBED` is itself — one generation, nothing
-    * left to reconcile. Concurrent-safe maintenance: serialized against
-    * other compactors by the `_MAINT` lease, fenced at the commit, with
-    * fresh allocation + a grace-horizon sweep (racing merges/readers keep
-    * their snapshot; abandoned claimed dirs sweep once stale).
+    * left to reconcile. Concurrent-safe through [[GenState.fold]].
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalMedia.compact: no state at $stateDir")
-    val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-    // tombstones applied PHYSICALLY, per-GENERATION
-    // ([[LabelState.purgeByGen]], string-keyed): pre-delete sigs/pairs
-    // leave disk even for re-ingested names — a delete-then-re-ingest
-    // must not retain its pre-delete signature rows through maintenance
-    val hasTombs = versions.exists(v =>
-      GenState.tableExists(spark, stateDir, v, "tombstones"))
-    def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
-    def purgedSigs(v: Int): DataFrame =
-      if (!hasTombs) spark.read.parquet(sigsPath(spark, stateDir, v))
-      else LabelState.purgeByGen(tombs,
-        Seq((v, spark.read.parquet(sigsPath(spark, stateDir, v)))), Seq("name"))
-    GenState.writeProbed(spark, stateDir, next, Seq(next), claim, commitTable)
-    // batch-key exactly-once must survive maintenance: carry the folded
-    // generations' ingest markers onto the compacted one
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-    GenState.fencedParquet(spark, stateDir, next, "sigs", claim, commitTable)(
-      (if (!hasTombs) spark.read.parquet(versions.map(sigsPath(spark, stateDir, _)): _*)
-       else LabelState.purgeByGen(tombs,
-         versions.map(v => (v, spark.read.parquet(sigsPath(spark, stateDir, v)))),
-         Seq("name")))
-        .dropDuplicates("name", "frame_no"))
-    val maxHamming = pinnedMaxHamming(spark, stateDir)
-    // blind pairs only — see [[pairs]]
-    val recon = GenState.classifyUnreconciled(spark, stateDir, versions)._1
-      .map { case (a, b) =>
-        val pa = purgedSigs(a)
-        candidatePairs(pa, pa.unionByName(purgedSigs(b)), maxHamming)
-      }
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-    val stored =
-      (if (!hasTombs) spark.read.parquet(versions.map(pairsPath(spark, stateDir, _)): _*)
-       else LabelState.purgePairsByGen(tombs,
-         effectiveTombstones(spark, stateDir, versions),
-         versions.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v)))),
-         Seq("name1", "name2")))
-    // the COMMIT write lands through the fence, which also re-verifies
-    // the maintenance lease: a stalled compactor stolen from mid-fold
-    // aborts here instead of landing a double-fold
-    GenState.fencedParquet(spark, stateDir, next, "pairs", claim, commitTable,
-      maintToken = Some(maint))(
+    fold(spark, stateDir) { (versions, next, claim) =>
+      // tombstones applied PHYSICALLY, per-GENERATION
+      // ([[LabelState.purgeByGen]], string-keyed): pre-delete sigs/pairs
+      // leave disk even for re-ingested names — a delete-then-re-ingest
+      // must not retain its pre-delete signature rows through maintenance
+      val hasTombs = versions.exists(v =>
+        GenState.tableExists(spark, stateDir, v, "tombstones"))
+      def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
+      def purgedSigs(v: Int): DataFrame =
+        if (!hasTombs) spark.read.parquet(sigsPath(spark, stateDir, v))
+        else LabelState.purgeByGen(tombs,
+          Seq((v, spark.read.parquet(sigsPath(spark, stateDir, v)))), Seq("name"))
+      GenState.writeProbed(spark, stateDir, next, Seq(next), claim, commitTable)
+      GenState.fencedParquet(spark, stateDir, next, "sigs", claim, commitTable)(
+        (if (!hasTombs) spark.read.parquet(versions.map(sigsPath(spark, stateDir, _)): _*)
+         else LabelState.purgeByGen(tombs,
+           versions.map(v => (v, spark.read.parquet(sigsPath(spark, stateDir, v)))),
+           Seq("name")))
+          .dropDuplicates("name", "frame_no"))
+      val maxHamming = pinnedMaxHamming(spark, stateDir)
+      // blind pairs only — see [[pairs]]
+      val recon = GenState.classifyUnreconciled(spark, stateDir, versions)._1
+        .map { case (a, b) =>
+          val pa = purgedSigs(a)
+          candidatePairs(pa, pa.unionByName(purgedSigs(b)), maxHamming)
+        }
+      val stored =
+        (if (!hasTombs) spark.read.parquet(versions.map(pairsPath(spark, stateDir, _)): _*)
+         else LabelState.purgePairsByGen(tombs,
+           effectiveTombstones(spark, stateDir, versions),
+           versions.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v)))),
+           Seq("name1", "name2")))
       (stored +: recon).reduce(_ unionByName _)
-        .dropDuplicates("name1", "name2"))
-    GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
+        .dropDuplicates("name1", "name2")
+    }
 }

@@ -59,19 +59,10 @@ import org.apache.spark.sql.functions._
   * any outstanding reconciliation durable. The concurrent-commit
   * scenarios are pinned in MinHashMultiWriterSpec.
   */
-object IncrementalMinHash {
+object IncrementalMinHash extends TombstoneFamily {
 
-  /** The commit table GenState keys generation liveness on — the value
-    * [[GenState]]'s defaults assume; exposed so cross-family consumers
-    * ([[Deletes.modalities]]) can never silently diverge.
-    */
-  private[ops] val commitTable = "labels"
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir)
+  val commitTable = "labels"
+  val idColumn = "doc_id"
 
   // resolved through [[GenState.tablePath]]: publish-mode-agnostic reads;
   // `tok` is the claim token for pre-commit reads of an OWN in-flight
@@ -216,84 +207,60 @@ object IncrementalMinHash {
 
   /** LSM maintenance, [[IncrementalDedup.compact]]'s shape with TWO index
     * tables: fold every live generation's bands and sets into one new
-    * generation, record the folded sources in the `_COMPACTED` manifest
-    * BEFORE the commit, then delete them plus any crash-window leftovers.
-    * Quiesced single-writer maintenance with FRESH allocation (the
-    * multi-writer merges can leave abandoned claimed dirs — and shadowed
-    * duplicate-key generations — that a targeted versions.last+1 claim
-    * would collide with); makes any outstanding concurrent-commit
-    * reconciliation DURABLE: the folded pair table includes the recon
-    * cross pairs (computed from PURGED bands/sets so deleted docs never
-    * resurface), the labels snapshot is the fully-reconciled labeling,
-    * and the compacted generation's `_PROBED` is itself — one generation,
-    * nothing left to reconcile. Returns the new generation.
+    * generation under [[GenState.fold]]'s commit protocol. Makes any
+    * outstanding concurrent-commit reconciliation DURABLE: the folded
+    * pair table includes the recon cross pairs (computed from PURGED
+    * bands/sets so deleted docs never resurface), the labels snapshot is
+    * the fully-reconciled labeling, and the compacted generation's
+    * `_PROBED` is itself — one generation, nothing left to reconcile.
+    * Returns the new generation.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalMinHash.compact: no state at $stateDir")
-    val (next, claim) = GenState.claimFresh(spark, stateDir)
-    // tombstones applied PHYSICALLY at the fold, per-GENERATION
-    // ([[LabelState.purgeByGen]]): pre-delete rows leave disk even for
-    // re-ingested ids — the d29 purge protocol without the re-ingest
-    // retention hole. Tombstone-free state keeps the multi-path scans.
-    val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
-    def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
-    def purged(path: Int => String, v: Int): DataFrame =
-      if (!hasTombs) spark.read.parquet(path(v))
-      else LabelState.purgeByGen(tombs,
-        Seq((v, spark.read.parquet(path(v)))), Seq("doc_id"))
-    def foldTable(path: Int => String): DataFrame =
-      if (!hasTombs) spark.read.parquet(versions.map(path): _*)
-      else LabelState.purgeByGen(tombs,
-        versions.map(v => (v, spark.read.parquet(path(v)))), Seq("doc_id"))
-    GenState.writeProbed(spark, stateDir, next, Seq(next), claim)
-    // batch-key exactly-once must survive maintenance: carry the folded
-    // generations' ingest markers onto the compacted one
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim)
-    GenState.fencedParquet(spark, stateDir, next, "bands", claim)(
-      foldTable(bandsPath(spark, stateDir, _)))
-    GenState.fencedParquet(spark, stateDir, next, "sets", claim)(
-      foldTable(setsPath(spark, stateDir, _)))
-    val recon = reconInputs(spark, stateDir, versions,
-      purged(bandsPath(spark, stateDir, _), _), purged(setsPath(spark, stateDir, _), _))
-    val pairVs = versions.filter(v => GenState.tableExists(spark, stateDir, v, "pairs"))
-    require(recon.isEmpty || pairVs == versions,
-      s"IncrementalMinHash.compact: concurrent commits at $stateDir need every " +
-        "generation's pairs table to reconcile — pre-retention layout found")
-    if (pairVs == versions) {
-      val stored =
-        (if (!hasTombs)
-           spark.read.parquet(pairVs.map(pairsPath(spark, stateDir, _)): _*)
-             .select(col("d1").cast("long"), col("d2").cast("long"))
-         else LabelState.purgePairsByGen(tombs,
-           LabelState.effectiveTombstones(spark, stateDir, versions, "sets", "doc_id"),
-           pairVs.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v))
-             .select(col("d1").cast("long"), col("d2").cast("long")))),
-           Seq("d1", "d2")))
-      GenState.fencedParquet(spark, stateDir, next, "pairs", claim)(
-        recon.map(_._1).fold(stored)(r => stored.unionByName(
-            r.select(col("d1").cast("long"), col("d2").cast("long"))))
-          .dropDuplicates("d1", "d2"))
-    }
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim)
-    GenState.fencedParquet(spark, stateDir, next, "labels", claim,
-        maintToken = Some(maint))(
+    fold(spark, stateDir) { (versions, next, claim) =>
+      // tombstones applied PHYSICALLY at the fold, per-GENERATION
+      // ([[LabelState.purgeByGen]]): pre-delete rows leave disk even for
+      // re-ingested ids — the d29 purge protocol without the re-ingest
+      // retention hole. Tombstone-free state keeps the multi-path scans.
+      val hasTombs = LabelState.tombstoneVersions(spark, stateDir, versions).nonEmpty
+      def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
+      def purged(path: Int => String, v: Int): DataFrame =
+        if (!hasTombs) spark.read.parquet(path(v))
+        else LabelState.purgeByGen(tombs,
+          Seq((v, spark.read.parquet(path(v)))), Seq("doc_id"))
+      def foldTable(path: Int => String): DataFrame =
+        if (!hasTombs) spark.read.parquet(versions.map(path): _*)
+        else LabelState.purgeByGen(tombs,
+          versions.map(v => (v, spark.read.parquet(path(v)))), Seq("doc_id"))
+      GenState.writeProbed(spark, stateDir, next, Seq(next), claim)
+      GenState.fencedParquet(spark, stateDir, next, "bands", claim)(
+        foldTable(bandsPath(spark, stateDir, _)))
+      GenState.fencedParquet(spark, stateDir, next, "sets", claim)(
+        foldTable(setsPath(spark, stateDir, _)))
+      val recon = reconInputs(spark, stateDir, versions,
+        purged(bandsPath(spark, stateDir, _), _), purged(setsPath(spark, stateDir, _), _))
+      val pairVs = versions.filter(v => GenState.tableExists(spark, stateDir, v, "pairs"))
+      require(recon.isEmpty || pairVs == versions,
+        s"IncrementalMinHash.compact: concurrent commits at $stateDir need every " +
+          "generation's pairs table to reconcile — pre-retention layout found")
+      if (pairVs == versions) {
+        val stored =
+          (if (!hasTombs)
+             spark.read.parquet(pairVs.map(pairsPath(spark, stateDir, _)): _*)
+               .select(col("d1").cast("long"), col("d2").cast("long"))
+           else LabelState.purgePairsByGen(tombs,
+             LabelState.effectiveTombstones(spark, stateDir, versions, "sets", "doc_id"),
+             pairVs.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v))
+               .select(col("d1").cast("long"), col("d2").cast("long")))),
+             Seq("d1", "d2")))
+        GenState.fencedParquet(spark, stateDir, next, "pairs", claim)(
+          recon.map(_._1).fold(stored)(r => stored.unionByName(
+              r.select(col("d1").cast("long"), col("d2").cast("long"))))
+            .dropDuplicates("d1", "d2"))
+      }
       LabelState.deletedAwareLabels(spark, stateDir, versions, "sets", "doc_id",
           recon.map(_._1), recon.map(_._2))
-        .withColumn("gen", lit(next)))
-    GenState.sweepLeftovers(spark, stateDir, "labels", except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive)(compact(spark, stateDir))
+        .withColumn("gen", lit(next))
+    }
 
   /** The d7-shaped cluster table from the current state: the latest-wins
     * fold over the live label deltas with tombstones applied — PLUS, for

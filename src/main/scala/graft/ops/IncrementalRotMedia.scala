@@ -35,12 +35,10 @@ import org.apache.spark.sql.functions._
   * read/compact for genuinely-concurrent commits (pinned in
   * MediaMultiWriterSpec's orbit scenario).
   */
-object IncrementalRotMedia {
+object IncrementalRotMedia extends TombstoneFamily {
 
-  private[ops] val commitTable = "pairs"
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
+  val commitTable = "pairs"
+  val idColumn = "name"
 
   // resolved through [[GenState.tablePath]]: publish-mode-agnostic reads;
   // `tok` is the claim token for pre-commit reads of an OWN in-flight
@@ -211,60 +209,38 @@ object IncrementalRotMedia {
     * rows through maintenance.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalRotMedia.compact: no state at $stateDir")
-    val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-    val hasTombs = versions.exists(v =>
-      GenState.tableExists(spark, stateDir, v, "tombstones"))
-    def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
-    def purgedSigs(v: Int): DataFrame =
-      if (!hasTombs) spark.read.parquet(sigsPath(spark, stateDir, v))
-      else LabelState.purgeByGen(tombs,
-        Seq((v, spark.read.parquet(sigsPath(spark, stateDir, v)))), Seq("name"))
-    GenState.writeProbed(spark, stateDir, next, Seq(next), claim, commitTable)
-    // batch-key exactly-once must survive maintenance: carry the folded
-    // generations' ingest markers onto the compacted one
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-    GenState.fencedParquet(spark, stateDir, next, "sigs", claim, commitTable)(
-      (if (!hasTombs) spark.read.parquet(versions.map(sigsPath(spark, stateDir, _)): _*)
-       else LabelState.purgeByGen(tombs,
-         versions.map(v => (v, spark.read.parquet(sigsPath(spark, stateDir, v)))),
-         Seq("name")))
-        .dropDuplicates("name", "t"))
-    // reconciled cross pairs of concurrent commits, from PURGED sigs so
-    // deleted names never resurface through reconciliation — durable here
-    val maxHamming = IncrementalMedia.pinnedMaxHamming(spark, stateDir)
-    // blind pairs only — see [[pairs]]
-    val recon = GenState.classifyUnreconciled(spark, stateDir, versions)._1
-      .map { case (a, b) =>
-        val pa = purgedSigs(a)
-        mergePairs(pa, pa.unionByName(purgedSigs(b)), maxHamming)
-      }
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-    val stored =
-      (if (!hasTombs) spark.read.parquet(versions.map(pairsPath(spark, stateDir, _)): _*)
-       else LabelState.purgePairsByGen(tombs,
-         effectiveTombstones(spark, stateDir, versions),
-         versions.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v)))),
-         Seq("name1", "name2")))
-    // the COMMIT write lands through the fence, which also re-verifies
-    // the maintenance lease
-    GenState.fencedParquet(spark, stateDir, next, "pairs", claim, commitTable,
-      maintToken = Some(maint))(
+    fold(spark, stateDir) { (versions, next, claim) =>
+      val hasTombs = versions.exists(v =>
+        GenState.tableExists(spark, stateDir, v, "tombstones"))
+      def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
+      def purgedSigs(v: Int): DataFrame =
+        if (!hasTombs) spark.read.parquet(sigsPath(spark, stateDir, v))
+        else LabelState.purgeByGen(tombs,
+          Seq((v, spark.read.parquet(sigsPath(spark, stateDir, v)))), Seq("name"))
+      GenState.writeProbed(spark, stateDir, next, Seq(next), claim, commitTable)
+      GenState.fencedParquet(spark, stateDir, next, "sigs", claim, commitTable)(
+        (if (!hasTombs) spark.read.parquet(versions.map(sigsPath(spark, stateDir, _)): _*)
+         else LabelState.purgeByGen(tombs,
+           versions.map(v => (v, spark.read.parquet(sigsPath(spark, stateDir, v)))),
+           Seq("name")))
+          .dropDuplicates("name", "t"))
+      // reconciled cross pairs of concurrent commits, from PURGED sigs so
+      // deleted names never resurface through reconciliation — durable here
+      val maxHamming = IncrementalMedia.pinnedMaxHamming(spark, stateDir)
+      // blind pairs only — see [[pairs]]
+      val recon = GenState.classifyUnreconciled(spark, stateDir, versions)._1
+        .map { case (a, b) =>
+          val pa = purgedSigs(a)
+          mergePairs(pa, pa.unionByName(purgedSigs(b)), maxHamming)
+        }
+      val stored =
+        (if (!hasTombs) spark.read.parquet(versions.map(pairsPath(spark, stateDir, _)): _*)
+         else LabelState.purgePairsByGen(tombs,
+           effectiveTombstones(spark, stateDir, versions),
+           versions.map(v => (v, spark.read.parquet(pairsPath(spark, stateDir, v)))),
+           Seq("name1", "name2")))
       (stored +: recon).reduce(_ unionByName _)
         .groupBy(col("name1"), col("name2"))
-        .agg(min(col("hamming")).as("hamming")))
-    GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
+        .agg(min(col("hamming")).as("hamming"))
+    }
 }

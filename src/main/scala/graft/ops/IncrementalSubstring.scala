@@ -56,15 +56,10 @@ import org.apache.spark.sql.functions._
   * all three tables the LSM way (occ with re-aggregation — sum is
   * associative).
   */
-object IncrementalSubstring {
+object IncrementalSubstring extends TombstoneFamily {
 
-  private[ops] val commitTable = "hits"
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
+  val commitTable = "hits"
+  val idColumn = "doc_id"
 
   // resolved through [[GenState.tablePath]]: publish-mode-agnostic reads;
   // `tok` is the claim token for pre-commit reads of an OWN in-flight
@@ -435,81 +430,58 @@ object IncrementalSubstring {
     * fold is pure concatenation.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      compactUnderLease(spark, stateDir, maint)
-    }
-
-  private def compactUnderLease(spark: SparkSession, stateDir: String,
-      maint: String): Int = {
-    val versions = completeVersions(spark, stateDir)
-    require(versions.nonEmpty, s"IncrementalSubstring.compact: no state at $stateDir")
-    // fresh allocation (multi-writer merges can leave abandoned claimed
-    // dirs and shadowed duplicate-key generations); serialized against
-    // other compactors by the _MAINT lease, concurrent-safe vs live merges
-    val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-    GenState.writeProbed(spark, stateDir, next, Seq(next), claim, commitTable)
-    // tombstones applied PHYSICALLY to anchors/docs/hits per-GENERATION
-    // ([[LabelState.purgeByGen]] — pre-delete rows leave disk even for
-    // re-ingested ids); occ is APPEND-ONLY and folds the full history —
-    // see [[delete]]
-    val hasTombs = versions.exists(v =>
-      GenState.tableExists(spark, stateDir, v, "tombstones"))
-    def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
-    GenState.fencedParquet(spark, stateDir, next, "anchors", claim, commitTable)(
-      if (!hasTombs) spark.read.parquet(versions.map(anchorsPath(spark, stateDir, _)): _*)
-      else LabelState.purgeByGen(tombs,
-        versions.map(v => (v, spark.read.parquet(anchorsPath(spark, stateDir, v)))),
-        Seq("doc_id")))
-    // the slim doc projection folds the same way (legacy generations
-    // without one backfill from their anchors — compaction IS the
-    // migration point, as for occ)
-    val docsFrames = versions.map { v =>
-      val have = GenState.tableExists(spark, stateDir, v, "docs")
-      (v, if (have) spark.read.parquet(docsPath(spark, stateDir, v))
-          else spark.read.parquet(anchorsPath(spark, stateDir, v))
-            .select(col("doc_id")).dropDuplicates("doc_id"))
-    }
-    GenState.fencedParquet(spark, stateDir, next, "docs", claim, commitTable)(
-      (if (!hasTombs) docsFrames.map(_._2).reduce(_ unionByName _)
-       else LabelState.purgeByGen(tombs, docsFrames, Seq("doc_id")))
-        .dropDuplicates("doc_id"))
-    // occ partials fold WITH re-aggregation (sum is associative): the
-    // compacted index returns to one row per distinct anchor. Pre-occ
-    // generations backfill from their anchors here ([[foldedOcc]]) —
-    // compaction IS the migration point for legacy state dirs.
-    GenState.fencedParquet(spark, stateDir, next, "occ", claim, commitTable)(
-      foldedOcc(spark, stateDir, versions))
-    GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-    // markers travel with the fold: a re-delivered batch key must stay a
-    // no-op after maintenance
-    GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-    // outstanding concurrent-commit reconciliation becomes DURABLE here:
-    // cross hits recomputed from the PURGED per-generation anchors (deleted
-    // docs never resurface), cold-filtered by the final-count hot set
-    def purgedAnchors(v: Int): DataFrame =
-      if (!hasTombs) spark.read.parquet(anchorsPath(spark, stateDir, v))
-      else LabelState.purgeByGen(tombs,
-        Seq((v, spark.read.parquet(anchorsPath(spark, stateDir, v)))), Seq("doc_id"))
-    val hotNow = foldedOcc(spark, stateDir, versions)
-      .where(col("aocc") > Dedup.anchorMaxOcc).select(col("anchor"))
-    val recon = reconHits(spark, stateDir, versions, hotNow, purgedAnchors)
-    val storedHits =
-      (if (!hasTombs) spark.read.parquet(versions.map(hitsPath(spark, stateDir, _)): _*)
-       else LabelState.purgePairsByGen(tombs,
-         LabelState.effectiveTombstones(spark, stateDir, versions,
-           probeTable(spark, stateDir, versions), "doc_id"),
-         versions.map(v => (v, spark.read.parquet(hitsPath(spark, stateDir, v)))),
-         Seq("d1", "d2")))
-        .select(col("d1"), col("d2"), col("i"), col("j"), col("anchor"))
-    GenState.fencedParquet(spark, stateDir, next, "hits", claim, commitTable,
-        maintToken = Some(maint))(
+    fold(spark, stateDir) { (versions, next, claim) =>
+      GenState.writeProbed(spark, stateDir, next, Seq(next), claim, commitTable)
+      // tombstones applied PHYSICALLY to anchors/docs/hits per-GENERATION
+      // ([[LabelState.purgeByGen]] — pre-delete rows leave disk even for
+      // re-ingested ids); occ is APPEND-ONLY and folds the full history —
+      // see [[delete]]
+      val hasTombs = versions.exists(v =>
+        GenState.tableExists(spark, stateDir, v, "tombstones"))
+      def tombs = LabelState.tombstonesByGen(spark, stateDir, versions)
+      GenState.fencedParquet(spark, stateDir, next, "anchors", claim, commitTable)(
+        if (!hasTombs) spark.read.parquet(versions.map(anchorsPath(spark, stateDir, _)): _*)
+        else LabelState.purgeByGen(tombs,
+          versions.map(v => (v, spark.read.parquet(anchorsPath(spark, stateDir, v)))),
+          Seq("doc_id")))
+      // the slim doc projection folds the same way (legacy generations
+      // without one backfill from their anchors — compaction IS the
+      // migration point, as for occ)
+      val docsFrames = versions.map { v =>
+        val have = GenState.tableExists(spark, stateDir, v, "docs")
+        (v, if (have) spark.read.parquet(docsPath(spark, stateDir, v))
+            else spark.read.parquet(anchorsPath(spark, stateDir, v))
+              .select(col("doc_id")).dropDuplicates("doc_id"))
+      }
+      GenState.fencedParquet(spark, stateDir, next, "docs", claim, commitTable)(
+        (if (!hasTombs) docsFrames.map(_._2).reduce(_ unionByName _)
+         else LabelState.purgeByGen(tombs, docsFrames, Seq("doc_id")))
+          .dropDuplicates("doc_id"))
+      // occ partials fold WITH re-aggregation (sum is associative): the
+      // compacted index returns to one row per distinct anchor. Pre-occ
+      // generations backfill from their anchors here ([[foldedOcc]]) —
+      // compaction IS the migration point for legacy state dirs.
+      GenState.fencedParquet(spark, stateDir, next, "occ", claim, commitTable)(
+        foldedOcc(spark, stateDir, versions))
+      // outstanding concurrent-commit reconciliation becomes DURABLE here:
+      // cross hits recomputed from the PURGED per-generation anchors (deleted
+      // docs never resurface), cold-filtered by the final-count hot set
+      def purgedAnchors(v: Int): DataFrame =
+        if (!hasTombs) spark.read.parquet(anchorsPath(spark, stateDir, v))
+        else LabelState.purgeByGen(tombs,
+          Seq((v, spark.read.parquet(anchorsPath(spark, stateDir, v)))), Seq("doc_id"))
+      val hotNow = foldedOcc(spark, stateDir, versions)
+        .where(col("aocc") > Dedup.anchorMaxOcc).select(col("anchor"))
+      val recon = reconHits(spark, stateDir, versions, hotNow, purgedAnchors)
+      val storedHits =
+        (if (!hasTombs) spark.read.parquet(versions.map(hitsPath(spark, stateDir, _)): _*)
+         else LabelState.purgePairsByGen(tombs,
+           LabelState.effectiveTombstones(spark, stateDir, versions,
+             probeTable(spark, stateDir, versions), "doc_id"),
+           versions.map(v => (v, spark.read.parquet(hitsPath(spark, stateDir, v)))),
+           Seq("d1", "d2")))
+          .select(col("d1"), col("d2"), col("i"), col("j"), col("anchor"))
       (storedHits +: recon).reduce(_ unionByName _)
-        .dropDuplicates("d1", "d2", "i", "j"))
-    GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-    next
-  }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
+        .dropDuplicates("d1", "d2", "i", "j")
+    }
 }

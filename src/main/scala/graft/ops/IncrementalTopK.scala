@@ -31,15 +31,10 @@ import org.apache.spark.sql.functions._
   * top-k over survivors equals the one-shot over survivors, and a
   * re-ingested doc is live again.
   */
-object IncrementalTopK {
+object IncrementalTopK extends TombstoneFamily {
 
-  private[ops] val commitTable = "counts"
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
+  val commitTable = "counts"
+  val idColumn = "doc_id"
 
   private def countsPath(spark: SparkSession, stateDir: String, v: Int) =
     GenState.tablePath(spark, stateDir, v, "counts")
@@ -136,29 +131,5 @@ object IncrementalTopK {
     * per-doc rows); tombstones are applied physically and dropped.
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      val versions = completeVersions(spark, stateDir)
-      require(versions.nonEmpty, s"IncrementalTopK.compact: no state at $stateDir")
-      // FRESH allocation, not the targeted claim: `versions` excludes
-      // duplicate-key shadowed generations, so versions.last + 1 can collide
-      // with a committed (shadowed) dir and the targeted claim would abort
-      // every compact until an unrelated ingest landed past it; a fresh
-      // number never collides, and the sweep below removes every non-live
-      // dir regardless of where it sits
-      val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-      val folded = counts(spark, stateDir)
-      GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-      GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-      // the COMMIT write lands through the fence, which also re-verifies
-      // the maintenance lease
-      GenState.fencedParquet(spark, stateDir, next, "counts", claim, commitTable,
-        maintToken = Some(maint))(folded)
-      // grace-horizon sweep: folded sources leave disk after the store TTL
-      GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-      next
-    }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
+    fold(spark, stateDir)((_, _, _) => counts(spark, stateDir))
 }

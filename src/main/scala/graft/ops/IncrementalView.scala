@@ -41,9 +41,9 @@ import org.apache.spark.sql.functions._
   * corpus-sized work ever done is the map-side partial aggregation of
   * each batch at its own ingest — the minimum any engine must pay.
   */
-object IncrementalView {
+object IncrementalView extends StateFamily {
 
-  private[ops] val commitTable = "partials"
+  val commitTable = "partials"
 
   /** Reserved marker namespace for [[retract]] keys — see the note there.
     * FORMAT NOTE: state dirs whose retractions were recorded before this
@@ -54,12 +54,6 @@ object IncrementalView {
     * would re-open the cross-op collision this namespace closes.)
     */
   private val retractPrefix = "retract."
-
-  def completeVersions(spark: SparkSession, stateDir: String): Seq[Int] =
-    GenState.completeVersions(spark, stateDir, commitTable)
-
-  def latestVersion(spark: SparkSession, stateDir: String): Option[Int] =
-    GenState.latestVersion(spark, stateDir, commitTable)
 
   private def partialsPath(spark: SparkSession, stateDir: String, v: Int) =
     GenState.tablePath(spark, stateDir, v, "partials")
@@ -109,7 +103,7 @@ object IncrementalView {
     * delta a chained view ([[Weekly]]) absorbs by the same addition it
     * already does. A correction workflow is retract(bad) + merge(fixed);
     * a group whose events are all retracted folds to n == 0 and leaves
-    * the served view ([[fold]]'s emptied-group drop) exactly as the
+    * the served view ([[presentable]]'s emptied-group drop) exactly as the
     * direct rollup over the corrected events would have no row.
     *
     * The caller must retract events AS ORIGINALLY INGESTED (same rows) —
@@ -141,7 +135,7 @@ object IncrementalView {
     next
   }
 
-  private def fold(spark: SparkSession, stateDir: String, versions: Seq[Int]): DataFrame = {
+  private def rollup(spark: SparkSession, stateDir: String, versions: Seq[Int]): DataFrame = {
     if (versions.isEmpty) {
       import spark.implicits._
       return Seq.empty[(java.sql.Date, String, Long, Double)]
@@ -174,7 +168,7 @@ object IncrementalView {
 
   /** The maintained view: fold the live partials, round once, q14 shape. */
   def serve(spark: SparkSession, stateDir: String): DataFrame =
-    presentable(fold(spark, stateDir, completeVersions(spark, stateDir)), "day")
+    presentable(rollup(spark, stateDir, completeVersions(spark, stateDir)), "day")
 
   /** TIME TRAVEL: the view as of generation `v` — fold the live
     * generations with version ≤ v. Because every generation is an
@@ -190,7 +184,7 @@ object IncrementalView {
       s"IncrementalView.serveAsOf: generation $v predates the oldest live " +
         s"generation ${versions.head} — history before a compaction " +
         "boundary is vacuumed")
-    presentable(fold(spark, stateDir, versions.filter(_ <= v)), "day")
+    presentable(rollup(spark, stateDir, versions.filter(_ <= v)), "day")
   }
 
   /** CHANGE FEED: what the view gained BETWEEN generation `fromExclusive`
@@ -220,7 +214,7 @@ object IncrementalView {
         "the window start — that boundary is vacuumed")
     // DELTAS, not a view: negative n is a legitimate retraction delta and
     // an n == 0 row can still carry a sum correction — no [[presentable]]
-    fold(spark, stateDir, versions.filter(v => v > fromExclusive && v <= toInclusive))
+    rollup(spark, stateDir, versions.filter(v => v > fromExclusive && v <= toInclusive))
   }
 
   /** UNROUNDED change feed — the view-chaining contract. A downstream
@@ -309,31 +303,9 @@ object IncrementalView {
     * before the commit, markers travel with the fold (d18 protocol).
     */
   def compact(spark: SparkSession, stateDir: String): Int =
-    GenState.withMaintenance(spark, stateDir) { maint =>
-      val versions = completeVersions(spark, stateDir)
-      require(versions.nonEmpty, s"IncrementalView.compact: no state at $stateDir")
-      // FRESH allocation, not the targeted claim: `versions` excludes
-      // duplicate-key shadowed generations, so versions.last + 1 can collide
-      // with a committed (shadowed) dir and the targeted claim would abort
-      // every compact until an unrelated ingest landed past it; a fresh
-      // number never collides, and the sweep below removes every non-live
-      // dir regardless of where it sits
-      val (next, claim) = GenState.claimFresh(spark, stateDir, commitTable)
-      val folded = spark.read.parquet(versions.map(partialsPath(spark, stateDir, _)): _*)
+    fold(spark, stateDir) { (versions, _, _) =>
+      spark.read.parquet(versions.map(partialsPath(spark, stateDir, _)): _*)
         .groupBy(col("day"), col("event_type"))
         .agg(sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value"))
-      GenState.writeCompactManifest(spark, stateDir, next, versions, claim, commitTable)
-      GenState.copyIngestMarkers(spark, stateDir, versions, next, claim, commitTable)
-      // the COMMIT write lands through the fence, which also re-verifies
-      // the maintenance lease
-      GenState.fencedParquet(spark, stateDir, next, "partials", claim, commitTable,
-        maintToken = Some(maint))(folded)
-      // grace-horizon sweep: folded sources leave disk after the store TTL
-      GenState.sweepLeftovers(spark, stateDir, commitTable, except = next)
-      next
     }
-
-  /** [[GenState.maybeCompact]] policy over [[compact]]. */
-  def maybeCompact(spark: SparkSession, stateDir: String, maxLive: Int): Option[Int] =
-    GenState.maybeCompact(spark, stateDir, maxLive, commitTable)(compact(spark, stateDir))
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Deletes, GenState, IncrementalExact, IncrementalMedia, IncrementalMinHash}
+import graft.ops.{Deletes, GenState, IncrementalCard, IncrementalExact, IncrementalMedia,
+  IncrementalMinHash}
 
 /** Randomized crash-point soak for the generation protocol.
   *
@@ -26,10 +27,12 @@ import graft.ops.{Deletes, GenState, IncrementalExact, IncrementalMedia, Increme
   *      the crash-retry contract) and the rest of the script converges
   *      to exactly the no-crash final state.
   *
-  * Three families, chosen to span the protocol surface: exact
+  * Four families, chosen to span the protocol surface: exact
   * (count-partial — double-counting is the failure mode), MinHash
   * (probe-at-merge label family — pair/label state), media (binary
-  * codec chassis + facade tombstone). The seed is logged for replay.
+  * codec chassis + facade tombstone), card (count-distinct partials
+  * whose compact re-derives five tables from persisted tombstone
+  * survivors). The seed is logged for replay.
   */
 class CrashSoakSpec extends SparkSpec {
 
@@ -107,6 +110,20 @@ class CrashSoakSpec extends SparkSpec {
         "compact" -> (s => { IncrementalMedia.compact(spark, s); () })),
       s => if (GenState.completeVersions(spark, s, ct).isEmpty) Seq("∅")
         else sortedServe(IncrementalMedia.pairs(spark, s)))
+  }
+
+  private def cardFamily: Family = {
+    val b1 = docs.where(pmod(col("doc_id"), lit(2)) === 0)
+    val b2 = docs.where(pmod(col("doc_id"), lit(2)) === 1)
+    val victims = docs.select(col("doc_id")).limit(5)
+    Family("card", "partials",
+      Seq(
+        "merge-b1" -> (s => { IncrementalCard.merge(spark, s, b1, Some("k1")); () }),
+        "merge-b2" -> (s => { IncrementalCard.merge(spark, s, b2, Some("k2")); () }),
+        "tombstone" -> (s => { Deletes.tombstone(spark, s, "card", victims); () }),
+        "compact" -> (s => { IncrementalCard.compact(spark, s); () })),
+      s => if (GenState.completeVersions(spark, s, "partials").isEmpty) Seq("∅")
+        else sortedServe(IncrementalCard.serve(spark, s)))
   }
 
   private def stackText(t: Throwable): String = {
@@ -195,6 +212,10 @@ class CrashSoakSpec extends SparkSpec {
 
   test("media family: killed at a random mutation of every op — prefix reads exact, recovery total") {
     soak(mediaFamily)
+  }
+
+  test("card family: killed at a random mutation of every op — prefix reads exact, recovery total") {
+    soak(cardFamily)
   }
 
   /** The same soak under the rename-free POINTER publish: every mutation
